@@ -179,7 +179,7 @@ object IvmSoak {
         }
         val clRows = new graft.streaming.VersionedStateStore(spark, opsDir,
           Seq("cl", "p", "c", "att", "adj"),
-          mergeSpecs = GoldMaintenanceStream.OpsSpecs)
+          mergeSpecs = graft.engine.IncrementalGold.OpsSpecs)
           .load(k.toLong)("cl").count()
         println(f"""{"metric":"cl_traj","batch":$k,"live_claims":$live,""" +
           f""""cl_rows":$clRows,"fold_sec":$w%.2f}""")

@@ -34,7 +34,7 @@ import org.apache.spark.sql.types.LongType
   * later one first across a batch boundary (per-key order across
   * batches is what Kafka-style keyed partitions guarantee); that
   * violation nets a negative multiplicity downstream and
-  * [[IncrementalGold.merge]]'s guard fails the job loudly instead of
+  * [[IncrementalGold.fold]]'s guard fails the job loudly instead of
   * drifting.
   *
   * Scale shape: keyed/collapse are one |batch|-sized hash aggregation;

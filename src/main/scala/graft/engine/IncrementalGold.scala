@@ -44,10 +44,112 @@ import org.apache.spark.sql.types._
   */
 object IncrementalGold {
 
+  /** Merge algebra of one state table: grouping keys + the column
+    * whose zero witnesses an empty (droppable) group. Every non-key
+    * column must be a signed-additive measure. */
+  final case class MergeSpec(keys: Seq[String], countCol: String)
+
+  /** THE signed-fold kernel — every piece of maintained state (state ⊕
+    * Δ, the replay gates' k-way state views, the state store's
+    * base+delta reads and compactions) is folded here, and nowhere
+    * else. `frames` share one column set (by name): `spec.keys`, the
+    * count column, and signed-additive measures; each frame carries at
+    * most one row per key (states and partials are aggregates).
+    *
+    *   - Keyed signed sum over null-safe keys: a NULL key component
+    *     (null start_date rows → a NULL month) is a real group.
+    *   - Zero-drop: a group whose count nets to 0 is dropped.
+    *   - Guard: a count that nets NEGATIVE is the witness of a
+    *     multiset-inconsistent CDC feed (a delete of an absent row, a
+    *     duplicated insert); dropping zero-count groups is only sound
+    *     without one, so the job fails LOUDLY instead of letting the
+    *     mart drift from the full refresh. The guard lives INSIDE the
+    *     zero-drop filter predicate: as a projection on the count
+    *     column, column pruning removed it whenever a consumer did not
+    *     read the count (the exec mart's `polCusts` is read only as
+    *     `count(1)` per month). A codegen'd `when`, free on valid feeds.
+    *   - NULL measures: SQL SUM semantics in every form — a measure is
+    *     NULL only when every contribution to it is NULL, what the full
+    *     refresh computes. A signed sum cannot tell a retracted non-NULL
+    *     contribution from a live one, so a producer whose mart must
+    *     distinguish "every live value is NULL" carries an explicit
+    *     non-null count (the claims-ops `sr_n`/`delay_n`).
+    *   - One frame is returned as is (bootstrap state: no fold, no
+    *     zero-drop).
+    *
+    * REQUIREMENT on delta producers (zero-cancel): a group whose count
+    * nets to zero must have every measure net to zero too. It is what
+    * makes dropping zero groups once at the end of a k-way fold equal
+    * dropping them at every level of the pairwise chain. The one
+    * residual difference: a group cancelled and then reborn with only
+    * NULL contributions reads 0 in the k-way form (its cancelled
+    * contributions summed to 0) and NULL in the pairwise chain.
+    *
+    * The physical form follows from the number of frames — both
+    * measured in r19 on q224's replay:
+    *   - two frames (state ⊕ one Δ): a full-outer join adding matched
+    *     keys. Rewriting it as union + groupBy raised q224's summed task
+    *     time 367 → 561 s — at near-unique state grains the hash
+    *     aggregate's map-side partial pass reduces nothing and its
+    *     per-row buffer updates cost more than the join's one add per
+    *     matched key;
+    *   - k > 2 frames (a chain): ONE union + ONE groupBy. Replacing the
+    *     nested pairwise cascade with it cut q224's SortMergeJoin nodes
+    *     92 → 40 (and its shuffle budget 150 → 96). */
+  def fold(frames: Seq[DataFrame], spec: MergeSpec): DataFrame = {
+    require(frames.nonEmpty, "IncrementalGold.fold: no frames")
+    val MergeSpec(keys, countCol) = spec
+    val head = frames.head
+    val measures = head.columns.toSeq.filterNot(keys.contains)
+    def typed(c: Column, m: String): Column =
+      c.cast(head.schema(m).dataType).as(m)
+    def guarded(summed: DataFrame): DataFrame = {
+      val n = col(countCol)
+      summed.filter(when(n < 0, raise_error(concat(
+          lit(s"IncrementalGold: negative multiplicity in '$countCol' ("),
+          n.cast(StringType), lit(") — multiset-inconsistent CDC feed"))))
+        .otherwise(n =!= 0))
+    }
+    frames match {
+      case Seq(only) => only
+      case Seq(a, b) =>
+        val on = keys.map(k => col(s"a.$k") <=> col(s"b.$k")).reduce(_ && _)
+        guarded(a.alias("a").join(b.alias("b"), on, "full_outer")
+          .select(keys.map(k => coalesce(col(s"a.$k"), col(s"b.$k")).as(k)) ++
+            measures.map { m =>
+              val (x, y) = (col(s"a.$m"), col(s"b.$m"))
+              typed(coalesce(x + y, x, y), m)
+            }: _*))
+      case _ =>
+        guarded(frames.reduce(_ unionByName _)
+          .groupBy(keys.map(col): _*)
+          .agg(typed(sum(col(measures.head)), measures.head),
+            measures.tail.map(m => typed(sum(col(m)), m)): _*))
+    }
+  }
+
+  /** Fold each table's delta frame into its state table (state ⊕ Δ). */
+  private def foldTables(state: Map[String, DataFrame],
+      deltas: Map[String, DataFrame],
+      specs: Map[String, MergeSpec]): Map[String, DataFrame] =
+    specs.map { case (t, spec) => t -> fold(Seq(state(t), deltas(t)), spec) }
+
   /** Maintained state: per-month policy partials, the (month, customer)
     * multiplicity table, per-month claims partials. */
   final case class ExecState(polMonths: DataFrame, polCusts: DataFrame,
-      clMonths: DataFrame)
+      clMonths: DataFrame) {
+    def tables: Map[String, DataFrame] = Map("polMonths" -> polMonths,
+      "polCusts" -> polCusts, "clMonths" -> clMonths)
+  }
+  object ExecState {
+    def of(t: Map[String, DataFrame]): ExecState =
+      ExecState(t("polMonths"), t("polCusts"), t("clMonths"))
+  }
+
+  private[graft] val ExecSpecs = Map(
+    "polMonths" -> MergeSpec(Seq("report_period"), "n_pol"),
+    "polCusts" -> MergeSpec(Seq("report_period", "customer_id"), "n"),
+    "clMonths" -> MergeSpec(Seq("report_period"), "n_claims"))
 
   private val D4 = DecimalType(18, 4)
   private val D38 = DecimalType(38, 4)
@@ -115,107 +217,26 @@ object IncrementalGold {
         sum(when(col("fraud_indicator") === 1, col("__sign"))
           .otherwise(0L)).as("fraud"))
 
-  /** Dropping a zero-count group is only sound on a multiset-consistent
-    * CDC feed (no delete of an absent row, no duplicated insert). By
-    * default every [[merge]] therefore appends a lazy per-row guard
-    * that fails the job LOUDLY if a multiplicity nets negative — the
-    * witness of an inconsistent feed that would otherwise silently
-    * drift from the full refresh. The guard is a codegen'd `when`,
-    * free on valid feeds; `-Dgraft.ivm.unchecked=true` disables it. */
-  private def checkedMerge: Boolean =
-    !java.lang.Boolean.getBoolean("graft.ivm.unchecked")
+  /** The exec-summary batch partials — aggregate-only IVM, so the
+    * delta frames read no state. */
+  def execDeltaFrames(polDelta: DataFrame,
+      clDelta: DataFrame): Map[String, DataFrame] =
+    Map("polMonths" -> polMonthPartials(polDelta),
+      "polCusts" -> polCustPartials(polDelta),
+      "clMonths" -> clMonthPartials(clDelta))
 
-  /** Keyed signed merge: full-outer on null-safe keys (a NULL month —
-    * null start_date rows — is a real group), numeric columns added
-    * with 0-coalesce, groups whose row count reaches zero dropped.
-    * `countCol` names the column that witnesses emptiness.
-    *
-    * Physical-shape note (r19, MEASURED): rewriting this as the
-    * store's union + groupBy-sum fold made q224 WORSE (taskrun 367 →
-    * 561 s) — at near-unique state grains the hash aggregate's
-    * map-side partial pass reduces nothing and its per-row buffer
-    * updates cost more than the join's one add per matched key. The
-    * full-outer join stays; nested-fold recompute is attacked one
-    * level up ([[foldPartials]] + the flat replay state views). */
-  def merge(state: DataFrame, delta: DataFrame, keys: Seq[String],
-      countCol: String): DataFrame = {
-    val valueCols = state.columns.filterNot(keys.contains)
-    val cond = keys.map(k => col(s"a.$k") <=> col(s"b.$k")).reduce(_ && _)
-    val merged = state.alias("a").join(delta.alias("b"), cond, "full_outer")
-      .select(keys.map(k => coalesce(col(s"a.$k"), col(s"b.$k")).as(k)) ++
-        valueCols.map { c =>
-          (coalesce(col(s"a.$c"), lit(0)) + coalesce(col(s"b.$c"), lit(0)))
-            .cast(state.schema(c).dataType).as(c)
-        }: _*)
-      .filter(col(countCol) =!= 0)
-    if (!checkedMerge) merged
-    else merged.withColumn(countCol,
-      when(col(countCol) < 0, raise_error(concat(
-        lit(s"IncrementalGold: negative multiplicity in '$countCol' ("),
-        col(countCol).cast(StringType),
-        lit(") — multiset-inconsistent CDC feed"))))
-        .otherwise(col(countCol)))
-  }
+  /** Fold one pair of signed silver deltas into the state. The fold is
+    * lazy: a caller that keeps state across batches materializes it
+    * (the streaming maintainers' version write, or a localCheckpoint). */
+  def applyDelta(st: ExecState, polDelta: DataFrame,
+      clDelta: DataFrame): ExecState =
+    ExecState.of(foldTables(st.tables, execDeltaFrames(polDelta, clDelta),
+      ExecSpecs))
 
-  /** Flat k-fold of per-batch state partials: union + ONE aggregation
-    * + zero-drop — the [[graft.streaming.VersionedStateStore]]
-    * foldFrames algebra (union + groupBy-sum IS the k-fold [[merge]];
-    * zero-count groups contribute zero to every signed measure, so
-    * dropping them once at the end equals dropping them per level).
-    * The replay gates' state views use this so that EVERY consumer of
-    * state-at-batch-i pays one single-level fold over the checkpointed
-    * batch partials instead of recomputing an i-level nested [[merge]]
-    * cascade (q224's 25-SortMergeJoin plan, r18 verdict item 3). */
-  def foldPartials(frames: Seq[DataFrame], keys: Seq[String],
-      countCol: String): DataFrame = {
-    require(frames.nonEmpty, "foldPartials: no partials")
-    if (frames.lengthCompare(1) == 0) frames.head
-    else {
-      val schema = frames.head.schema
-      val valueCols = frames.head.columns.filterNot(keys.contains)
-      frames.reduce(_ unionByName _)
-        .groupBy(keys.map(col): _*)
-        .agg(sum(col(valueCols.head)).cast(schema(valueCols.head).dataType)
-          .as(valueCols.head),
-          valueCols.tail.map(c => sum(col(c)).cast(schema(c).dataType)
-            .as(c)): _*)
-        .filter(col(countCol) =!= 0)
-    }
-  }
-
-  /** Fold one pair of signed silver deltas into the state. With
-    * `materialize` (the DEFAULT — the production shape) each merged
-    * frame is eagerly localCheckpointed: state is a TABLE between
-    * batches, not a lineage chain that regrows per batch, and each
-    * batch is its own job. `materialize = false` folds lazily — used
-    * by the q218 gate, which replays FOUR batches inside one query:
-    * there the 12 sequential checkpoint jobs are pure overhead (the
-    * whole 4-batch DAG evaluates in one action), and values are
-    * identical either way (IncrementalGoldSpec runs the materialized
-    * path and the oracle gates the lazy one). */
-  def applyDelta(st: ExecState, polDelta: DataFrame, clDelta: DataFrame,
-      materialize: Boolean = true): ExecState = {
-    def mat(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(true) else df
-    ExecState(
-      mat(merge(st.polMonths, polMonthPartials(polDelta),
-        Seq("report_period"), "n_pol")),
-      mat(merge(st.polCusts, polCustPartials(polDelta),
-        Seq("report_period", "customer_id"), "n")),
-      mat(merge(st.clMonths, clMonthPartials(clDelta),
-        Seq("report_period"), "n_claims")))
-  }
-
-  /** Bootstrap state from the first batch (no merge — the partials ARE
+  /** Bootstrap state from the first batch (no fold — the partials ARE
     * the state). */
-  def init(polDelta: DataFrame, clDelta: DataFrame,
-      materialize: Boolean = true): ExecState = {
-    def mat(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(true) else df
-    ExecState(mat(polMonthPartials(polDelta)),
-      mat(polCustPartials(polDelta)),
-      mat(clMonthPartials(clDelta)))
-  }
+  def init(polDelta: DataFrame, clDelta: DataFrame): ExecState =
+    ExecState.of(execDeltaFrames(polDelta, clDelta))
 
   // ===================== JOIN-IVM: gold_policy_performance (q44/q221)
   // The executive-summary mart above is aggregate-only IVM; the policy
@@ -241,7 +262,20 @@ object IncrementalGold {
   // Everything per batch is |batch|-sized except the two keyed probes.
 
   final case class PolicyPerfState(polBase: DataFrame, pt: DataFrame,
-      cpm: DataFrame, cbt: DataFrame)
+      cpm: DataFrame, cbt: DataFrame) {
+    def tables: Map[String, DataFrame] = Map("polBase" -> polBase,
+      "pt" -> pt, "cpm" -> cpm, "cbt" -> cbt)
+  }
+  object PolicyPerfState {
+    def of(t: Map[String, DataFrame]): PolicyPerfState =
+      PolicyPerfState(t("polBase"), t("pt"), t("cpm"), t("cbt"))
+  }
+
+  private[graft] val PerfSpecs = Map(
+    "polBase" -> MergeSpec(Seq("policy_type", "policy_month"), "n_pol"),
+    "pt" -> MergeSpec(Seq("policy_id", "policy_type"), "n"),
+    "cpm" -> MergeSpec(Seq("policy_id", "claim_month"), "n_claims"),
+    "cbt" -> MergeSpec(Seq("policy_type", "claim_month"), "n_claims"))
 
   /** q44 policy_base partials, signed (type × start-month grid). */
   def ppPolBasePartials(delta: DataFrame): DataFrame =
@@ -290,66 +324,23 @@ object IncrementalGold {
         sum(col("settled")).cast(D38).as("settled"),
         sum(col("fraud")).as("fraud"))
 
-  /** Fold one batch pair into the policy-performance state (see the
-    * block comment for the delta rule; `materialize` as in
-    * [[applyDelta]]). Within a batch: re-attribution reads the
-    * PRE-batch CPM, fact attribution reads the POST-batch PT — exactly
-    * ΔPT⊗CPM_old + PT_new⊗ΔCPM, which telescopes to the full join. */
+  /** Fold one batch pair into the policy-performance state: its delta
+    * frames ([[policyPerfDeltaFrames]], the bilinear rule) folded into
+    * the state table by table. */
   def applyPolicyPerfDelta(st: PolicyPerfState, polDelta: DataFrame,
-      clDelta: DataFrame, materialize: Boolean = true,
-      materializeProbes: Boolean = false): PolicyPerfState = {
-    def mat(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(true) else df
-    // probe-state tables (pt, cpm) are read MORE THAN ONCE downstream
-    // of a lazy fold — by this batch's attribution terms AND the next
-    // batch's merge — so a fully-lazy multi-batch replay duplicates
-    // their subtrees ~2× per batch (r18 verdict: q224's 237-stage
-    // plan). materializeProbes pins JUST these two per batch, keeping
-    // the mart-grain chain (cbt/polBase) lazy-linear.
-    def matP(df: DataFrame): DataFrame =
-      if (materialize || materializeProbes) df.localCheckpoint(true) else df
-    val dPt = ptPartials(polDelta)
-    val reattr = attributed(dPt.select(col("policy_id"), col("policy_type"),
-      col("n")), st.cpm)
-    val dCpm = cpmPartials(clDelta)
-    // the two probe merges are independent — when materializing,
-    // overlap their checkpoint jobs (guide §2.6)
-    val probeTasks: Seq[() => DataFrame] = Seq(
-      () => matP(merge(st.pt, dPt, Seq("policy_id", "policy_type"), "n")),
-      () => matP(merge(st.cpm, dCpm,
-        Seq("policy_id", "claim_month"), "n_claims")))
-    val Seq(ptNew, cpmNew) =
-      if (materialize || materializeProbes)
-        graft.streaming.VersionedStateStore.inParallel(probeTasks)
-      else probeTasks.map(_())
-    val attr = attributed(ptNew, dCpm)
-    val cbtNew = mat(merge(st.cbt, cbtDelta(reattr, attr),
-      Seq("policy_type", "claim_month"), "n_claims"))
-    val pbNew = mat(merge(st.polBase, ppPolBasePartials(polDelta),
-      Seq("policy_type", "policy_month"), "n_pol"))
-    PolicyPerfState(pbNew, ptNew, cpmNew, cbtNew)
-  }
+      clDelta: DataFrame): PolicyPerfState =
+    PolicyPerfState.of(foldTables(st.tables,
+      policyPerfDeltaFrames(st, polDelta, clDelta), PerfSpecs))
 
   /** Bootstrap from the first batch: the delta rule against empty state
     * (re-attribution vacuous, fact attribution against the batch's own
     * dimension). */
-  def initPolicyPerf(polDelta: DataFrame, clDelta: DataFrame,
-      materialize: Boolean = true,
-      materializeProbes: Boolean = false): PolicyPerfState = {
-    def mat(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(true) else df
-    def matP(df: DataFrame): DataFrame =
-      if (materialize || materializeProbes) df.localCheckpoint(true) else df
-    val probeTasks: Seq[() => DataFrame] = Seq(
-      () => matP(ptPartials(polDelta)),
-      () => matP(cpmPartials(clDelta)))
-    val Seq(pt, cpm) =
-      if (materialize || materializeProbes)
-        graft.streaming.VersionedStateStore.inParallel(probeTasks)
-      else probeTasks.map(_())
-    val cbt = mat(cbtDelta(
-      attributed(pt, cpm).limit(0), attributed(pt, cpm)))
-    PolicyPerfState(mat(ppPolBasePartials(polDelta)), pt, cpm, cbt)
+  def initPolicyPerf(polDelta: DataFrame,
+      clDelta: DataFrame): PolicyPerfState = {
+    val pt = ptPartials(polDelta)
+    val cpm = cpmPartials(clDelta)
+    PolicyPerfState(ppPolBasePartials(polDelta), pt, cpm,
+      cbtDelta(attributed(pt, cpm).limit(0), attributed(pt, cpm)))
   }
 
   /** The policy-performance mart from maintained state: reassemble
@@ -403,7 +394,24 @@ object IncrementalGold {
   //     premium-only update nets zero and causes no re-attribution.
 
   final case class Customer360State(custDim: DataFrame, polMetrics: DataFrame,
-      polDates: DataFrame, pc: DataFrame, cpc: DataFrame, cm: DataFrame)
+      polDates: DataFrame, pc: DataFrame, cpc: DataFrame, cm: DataFrame) {
+    def tables: Map[String, DataFrame] = Map("custDim" -> custDim,
+      "polMetrics" -> polMetrics, "polDates" -> polDates, "pc" -> pc,
+      "cpc" -> cpc, "cm" -> cm)
+  }
+  object Customer360State {
+    def of(t: Map[String, DataFrame]): Customer360State =
+      Customer360State(t("custDim"), t("polMetrics"), t("polDates"),
+        t("pc"), t("cpc"), t("cm"))
+  }
+
+  private[graft] val C360Specs = Map(
+    "custDim" -> MergeSpec(Seq("customer_id", "age", "state"), "n"),
+    "polMetrics" -> MergeSpec(Seq("customer_id"), "n_pol"),
+    "polDates" -> MergeSpec(Seq("customer_id", "start_date"), "n"),
+    "pc" -> MergeSpec(Seq("policy_id", "customer_id"), "n"),
+    "cpc" -> MergeSpec(Seq("policy_id"), "n_claims"),
+    "cm" -> MergeSpec(Seq("customer_id"), "n_claims"))
 
   /** Signed multiplicity of the customer-base attribute tuples. */
   def c360CustDimPartials(delta: DataFrame): DataFrame =
@@ -468,64 +476,22 @@ object IncrementalGold {
         sum(col("fraud")).as("fraud"))
 
   /** Fold one CDC batch triple (customers, policies, claims) into the
-    * customer-360 state. Join side: ΔPC⊗CPC_old + PC_new⊗ΔCPC, exactly
-    * [[applyPolicyPerfDelta]]'s rule with the customer-keyed dimension. */
+    * customer-360 state: [[customer360DeltaFrames]] (join side
+    * ΔPC⊗CPC_old + PC_new⊗ΔCPC, [[applyPolicyPerfDelta]]'s rule with the
+    * customer-keyed dimension) folded in table by table. */
   def applyCustomer360Delta(st: Customer360State, custDelta: DataFrame,
-      polDelta: DataFrame, clDelta: DataFrame,
-      materialize: Boolean = true,
-      materializeProbes: Boolean = false): Customer360State = {
-    def mat(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(true) else df
-    // probe-state tables (pc, cpc): see applyPolicyPerfDelta — each is
-    // read by this batch's attribution AND the next batch's merge, so
-    // a lazy replay duplicates their subtrees per batch
-    def matP(df: DataFrame): DataFrame =
-      if (materialize || materializeProbes) df.localCheckpoint(true) else df
-    val dPc = c360PcPartials(polDelta)
-    val reattr = attributedCust(dPc, st.cpc)
-    val dCpc = c360CpcPartials(clDelta)
-    // the two probe merges are independent — when materializing,
-    // overlap their checkpoint jobs (guide §2.6)
-    val probeTasks: Seq[() => DataFrame] = Seq(
-      () => matP(merge(st.pc, dPc, Seq("policy_id", "customer_id"), "n")),
-      () => matP(merge(st.cpc, dCpc, Seq("policy_id"), "n_claims")))
-    val Seq(pcNew, cpcNew) =
-      if (materialize || materializeProbes)
-        graft.streaming.VersionedStateStore.inParallel(probeTasks)
-      else probeTasks.map(_())
-    val attr = attributedCust(pcNew, dCpc)
-    val cmNew = mat(merge(st.cm, cmDelta(reattr, attr),
-      Seq("customer_id"), "n_claims"))
-    Customer360State(
-      mat(merge(st.custDim, c360CustDimPartials(custDelta),
-        Seq("customer_id", "age", "state"), "n")),
-      mat(merge(st.polMetrics, c360PolMetricPartials(polDelta),
-        Seq("customer_id"), "n_pol")),
-      mat(merge(st.polDates, c360PolDatePartials(polDelta),
-        Seq("customer_id", "start_date"), "n")),
-      pcNew, cpcNew, cmNew)
-  }
+      polDelta: DataFrame, clDelta: DataFrame): Customer360State =
+    Customer360State.of(foldTables(st.tables,
+      customer360DeltaFrames(st, custDelta, polDelta, clDelta), C360Specs))
 
   /** Bootstrap from the first batch triple. */
   def initCustomer360(custDelta: DataFrame, polDelta: DataFrame,
-      clDelta: DataFrame, materialize: Boolean = true,
-      materializeProbes: Boolean = false): Customer360State = {
-    def mat(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(true) else df
-    def matP(df: DataFrame): DataFrame =
-      if (materialize || materializeProbes) df.localCheckpoint(true) else df
-    val probeTasks: Seq[() => DataFrame] = Seq(
-      () => matP(c360PcPartials(polDelta)),
-      () => matP(c360CpcPartials(clDelta)))
-    val Seq(pc, cpc) =
-      if (materialize || materializeProbes)
-        graft.streaming.VersionedStateStore.inParallel(probeTasks)
-      else probeTasks.map(_())
-    val cm = mat(cmDelta(attributedCust(pc, cpc).limit(0),
-      attributedCust(pc, cpc)))
-    Customer360State(mat(c360CustDimPartials(custDelta)),
-      mat(c360PolMetricPartials(polDelta)),
-      mat(c360PolDatePartials(polDelta)), pc, cpc, cm)
+      clDelta: DataFrame): Customer360State = {
+    val pc = c360PcPartials(polDelta)
+    val cpc = c360CpcPartials(clDelta)
+    Customer360State(c360CustDimPartials(custDelta),
+      c360PolMetricPartials(polDelta), c360PolDatePartials(polDelta), pc,
+      cpc, cmDelta(attributedCust(pc, cpc).limit(0), attributedCust(pc, cpc)))
   }
 
   /** The customer-360 mart from maintained state: reassemble q46's
@@ -592,15 +558,25 @@ object IncrementalGold {
   // never a P⊗C materialization, never a fact rescan.
 
   final case class ClaimsOpsState(cl: DataFrame, p: DataFrame, c: DataFrame,
-      att: DataFrame, adj: DataFrame)
+      att: DataFrame, adj: DataFrame) {
+    def tables: Map[String, DataFrame] = Map("cl" -> cl, "p" -> p, "c" -> c,
+      "att" -> att, "adj" -> adj)
+  }
+  object ClaimsOpsState {
+    def of(t: Map[String, DataFrame]): ClaimsOpsState =
+      ClaimsOpsState(t("cl"), t("p"), t("c"), t("att"), t("adj"))
+  }
 
-  private val CoClKeys = Seq("policy_id", "claim_type", "severity",
-    "status", "adjuster_id", "claim_month")
   private val CoAttKeys = Seq("claim_type", "severity", "status",
     "adjuster_id", "claim_month", "policy_type", "customer_state",
     "customer_age")
-  private val CoMeasures = Seq("n", "amt", "settled", "fraud",
-    "sr_sum", "sr_n", "delay_sum", "delay_n")
+  private[graft] val OpsSpecs = Map(
+    "cl" -> MergeSpec(Seq("policy_id", "claim_type", "severity", "status",
+      "adjuster_id", "claim_month"), "n"),
+    "p" -> MergeSpec(Seq("policy_id", "customer_id", "policy_type"), "n"),
+    "c" -> MergeSpec(Seq("customer_id", "state", "age"), "n"),
+    "att" -> MergeSpec(CoAttKeys, "n"),
+    "adj" -> MergeSpec(Seq("adjuster_id"), "n_handled"))
 
   /** Signed claim partials at (policy, claim-attrs, month) grain. */
   def coClPartials(delta: DataFrame): DataFrame =
@@ -713,69 +689,26 @@ object IncrementalGold {
         sum(col("delay_sum")).as("delay_sum"),
         sum(col("delay_n")).as("delay_n"))
 
-  /** Fold one CDC batch triple into the claims-operations state via the
-    * trilinear rule (see the block comment for which state version each
-    * term reads). */
+  /** Fold one CDC batch triple into the claims-operations state:
+    * [[claimsOpsDeltaFrames]] (the trilinear rule — see the block
+    * comment for which state version each term reads) folded in table
+    * by table. */
   def applyClaimsOpsDelta(st: ClaimsOpsState, custDelta: DataFrame,
-      polDelta: DataFrame, clDelta: DataFrame,
-      materialize: Boolean = true,
-      materializeProbes: Boolean = false): ClaimsOpsState = {
-    def mat(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(true) else df
-    // probe-state tables (cl, p, c): the trilinear terms read each of
-    // them 2–3× per batch (st.c in t1 AND t2; st.p in t1 AND t3 via
-    // pNew; clNew in t2 AND t3 AND the carried merge), so a lazy
-    // multi-batch replay triplicates their subtrees per batch — the
-    // r18-verdict 237-WholeStageCodegen q224 plan. materializeProbes
-    // pins JUST these three per batch; the mart-grain att/adj chain
-    // stays lazy-linear.
-    def matP(df: DataFrame): DataFrame =
-      if (materialize || materializeProbes) df.localCheckpoint(true) else df
-    val dCl = coClPartials(clDelta)
-    val dP = coPPartials(polDelta)
-    val dC = coCPartials(custDelta)
-    // the three probe merges are independent — when materializing,
-    // overlap their checkpoint jobs (guide §2.6)
-    val probeTasks: Seq[() => DataFrame] = Seq(
-      () => matP(merge(st.cl, dCl, CoClKeys, "n")),
-      () => matP(merge(st.p, dP,
-        Seq("policy_id", "customer_id", "policy_type"), "n")),
-      () => matP(merge(st.c, dC, Seq("customer_id", "state", "age"), "n")))
-    val Seq(clNew, pNew, cNew) =
-      if (materialize || materializeProbes)
-        graft.streaming.VersionedStateStore.inParallel(probeTasks)
-      else probeTasks.map(_())
-    val t1 = coT1(dCl, st.p, st.c)                       // ΔCL ⊗ P₀ ⊗ C₀
-    val t2 = coScale(clNew, coDimDims(dP, st.c, byCustomer = false)) // CL₁⊗ΔP⊗C₀
-    val t3 = coScale(clNew, coDimDims(dC, pNew, byCustomer = true))  // CL₁⊗P₁⊗ΔC
-    val attNew = mat(merge(st.att, coAttDelta(Seq(t1, t2, t3)),
-      CoAttKeys, "n"))
-    val adjNew = mat(merge(st.adj, coAdjPartials(clDelta),
-      Seq("adjuster_id"), "n_handled"))
-    ClaimsOpsState(clNew, pNew, cNew, attNew, adjNew)
-  }
+      polDelta: DataFrame, clDelta: DataFrame): ClaimsOpsState =
+    ClaimsOpsState.of(foldTables(st.tables,
+      claimsOpsDeltaFrames(st, custDelta, polDelta, clDelta), OpsSpecs))
 
   /** Bootstrap from the first batch triple: against empty state the
     * trilinear rule collapses to CL₁⊗P₁⊗ΔC with every factor the
     * batch's own partials. */
   def initClaimsOps(custDelta: DataFrame, polDelta: DataFrame,
-      clDelta: DataFrame, materialize: Boolean = true,
-      materializeProbes: Boolean = false): ClaimsOpsState = {
-    def mat(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(true) else df
-    def matP(df: DataFrame): DataFrame =
-      if (materialize || materializeProbes) df.localCheckpoint(true) else df
-    val probeTasks: Seq[() => DataFrame] = Seq(
-      () => matP(coClPartials(clDelta)),
-      () => matP(coPPartials(polDelta)),
-      () => matP(coCPartials(custDelta)))
-    val Seq(cl, p, c) =
-      if (materialize || materializeProbes)
-        graft.streaming.VersionedStateStore.inParallel(probeTasks)
-      else probeTasks.map(_())
-    val att = mat(coAttDelta(Seq(
-      coScale(cl, coDimDims(c, p, byCustomer = true)))))
-    ClaimsOpsState(cl, p, c, att, mat(coAdjPartials(clDelta)))
+      clDelta: DataFrame): ClaimsOpsState = {
+    val cl = coClPartials(clDelta)
+    val p = coPPartials(polDelta)
+    val c = coCPartials(custDelta)
+    ClaimsOpsState(cl, p, c,
+      coAttDelta(Seq(coScale(cl, coDimDims(c, p, byCustomer = true)))),
+      coAdjPartials(clDelta))
   }
 
   /** The claims-operations mart from maintained state: q47's maintained
@@ -820,17 +753,19 @@ object IncrementalGold {
   // per-batch maintenance lose to a full refresh at 10×). These
   // producers return the BATCH PARTIALS per state table — what
   // [[graft.streaming.VersionedStateStore.saveDelta]] persists (write
-  // ∝ |Δ|); the store folds base+deltas on read with the same signed
-  // merge algebra, so reconstruction is value-exact. The probe terms
-  // still read current state lazily (ptNew etc. are computed for the
-  // bilinear/trilinear attribution but never persisted).
+  // ∝ |Δ|); the store folds base+deltas on read through the same
+  // [[fold]], so reconstruction is value-exact. The in-memory
+  // maintainers (apply*Delta) fold the same frames into their state, so
+  // each delta rule exists once. The probe terms still read current
+  // state lazily (ptNew etc. are computed for the bilinear/trilinear
+  // attribution but never persisted).
 
   def policyPerfDeltaFrames(st: PolicyPerfState, polDelta: DataFrame,
       clDelta: DataFrame): Map[String, DataFrame] = {
     val dPt = ptPartials(polDelta)
     val reattr = attributed(dPt.select(col("policy_id"), col("policy_type"),
       col("n")), st.cpm)
-    val ptNew = merge(st.pt, dPt, Seq("policy_id", "policy_type"), "n")
+    val ptNew = fold(Seq(st.pt, dPt), PerfSpecs("pt"))
     val dCpm = cpmPartials(clDelta)
     val attr = attributed(ptNew, dCpm)
     Map("polBase" -> ppPolBasePartials(polDelta), "pt" -> dPt,
@@ -841,7 +776,7 @@ object IncrementalGold {
       polDelta: DataFrame, clDelta: DataFrame): Map[String, DataFrame] = {
     val dPc = c360PcPartials(polDelta)
     val reattr = attributedCust(dPc, st.cpc)
-    val pcNew = merge(st.pc, dPc, Seq("policy_id", "customer_id"), "n")
+    val pcNew = fold(Seq(st.pc, dPc), C360Specs("pc"))
     val dCpc = c360CpcPartials(clDelta)
     val attr = attributedCust(pcNew, dCpc)
     Map("custDim" -> c360CustDimPartials(custDelta),
@@ -856,10 +791,9 @@ object IncrementalGold {
     val dP = coPPartials(polDelta)
     val dC = coCPartials(custDelta)
     val t1 = coT1(dCl, st.p, st.c)
-    val clNew = merge(st.cl, dCl, CoClKeys, "n")
+    val clNew = fold(Seq(st.cl, dCl), OpsSpecs("cl"))
     val t2 = coScale(clNew, coDimDims(dP, st.c, byCustomer = false))
-    val pNew = merge(st.p, dP,
-      Seq("policy_id", "customer_id", "policy_type"), "n")
+    val pNew = fold(Seq(st.p, dP), OpsSpecs("p"))
     val t3 = coScale(clNew, coDimDims(dC, pNew, byCustomer = true))
     Map("cl" -> dCl, "p" -> dP, "c" -> dC,
       "att" -> coAttDelta(Seq(t1, t2, t3)),
@@ -877,8 +811,8 @@ object IncrementalGold {
   // base+delta fold commutes with the fold (the fold groups by the
   // merge keys, and the slice predicate is a function of them), and
   // (b) rows outside the slice could never have matched the join.
-  // Post-batch probe factors (e.g. ptNew = merge(pt, dPt)) are built
-  // from SLICED inputs: merge(pt, dPt) ⋉ K = merge(pt ⋉ K, dPt ⋉ K)
+  // Post-batch probe factors (e.g. ptNew = fold(pt, dPt)) are built
+  // from SLICED inputs: fold(pt, dPt) ⋉ K = fold(pt ⋉ K, dPt ⋉ K)
   // for any key set K over merge-key columns. KeyedIvmSpec pins each
   // producer's output against its full-state twin on the 4-batch CDC
   // fixture.
@@ -918,8 +852,8 @@ object IncrementalGold {
     val reattr = attributed(dPt.select(col("policy_id"),
       col("policy_type"), col("n")), cpmSlice)
     val kCl = dCpm.select("policy_id")
-    val ptNewSlice = merge(probe.slice("pt", kCl), sliceOf(dPt, kCl),
-      Seq("policy_id", "policy_type"), "n")
+    val ptNewSlice = fold(Seq(probe.slice("pt", kCl), sliceOf(dPt, kCl)),
+      PerfSpecs("pt"))
     val attr = attributed(ptNewSlice, dCpm)
     Map("polBase" -> ppPolBasePartials(polDelta), "pt" -> dPt,
       "cpm" -> dCpm, "cbt" -> cbtDelta(reattr, attr))
@@ -936,8 +870,8 @@ object IncrementalGold {
     val reattr = attributedCust(dPc,
       probe.slice("cpc", dPc.select("policy_id")))
     val kCl = dCpc.select("policy_id")
-    val pcNewSlice = merge(probe.slice("pc", kCl), sliceOf(dPc, kCl),
-      Seq("policy_id", "customer_id"), "n")
+    val pcNewSlice = fold(Seq(probe.slice("pc", kCl), sliceOf(dPc, kCl)),
+      C360Specs("pc"))
     val attr = attributedCust(pcNewSlice, dCpc)
     Map("custDim" -> c360CustDimPartials(custDelta),
       "polMetrics" -> c360PolMetricPartials(polDelta),
@@ -960,7 +894,7 @@ object IncrementalGold {
       () => coPPartials(polDelta).localCheckpoint(true),
       () => coCPartials(custDelta).localCheckpoint(true)))
     def clNewSlice(keys: DataFrame): DataFrame =
-      merge(probe.slice("cl", keys), sliceOf(dCl, keys), CoClKeys, "n")
+      fold(Seq(probe.slice("cl", keys), sliceOf(dCl, keys)), OpsSpecs("cl"))
     val Seq(pSlice1, dims2, dims3) =
       graft.streaming.VersionedStateStore.inParallel(Seq(
         // ΔCL ⊗ P₀ ⊗ C₀
@@ -971,8 +905,8 @@ object IncrementalGold {
           byCustomer = false).localCheckpoint(true),
         // CL₁ ⊗ P₁ ⊗ ΔC — P₁ sliced to the customer delta's customers
         () => { val kC = dC.select("customer_id")
-          val pNewSlice = merge(probe.slice("p", kC), sliceOf(dP, kC),
-            Seq("policy_id", "customer_id", "policy_type"), "n")
+          val pNewSlice = fold(Seq(probe.slice("p", kC), sliceOf(dP, kC)),
+            OpsSpecs("p"))
           coDimDims(dC, pNewSlice, byCustomer = true)
             .localCheckpoint(true) }))
     val cSlice1 = probe.slice("c", pSlice1.select("customer_id"))

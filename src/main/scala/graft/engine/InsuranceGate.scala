@@ -1176,32 +1176,22 @@ object InsuranceGate extends QueryModule {
         cu.map(mat(_, CustDeltaCols)))
     })
 
-  /** Replay-fold policy for the join-IVM gates (q221/q223/q224), all
-    * value-identical (the oracle gates pin it):
-    *   - "flat" (default, r19): state-at-batch-i is a SINGLE-LEVEL
-    *     [[IncrementalGold.foldPartials]] view over the accumulated
-    *     batch partials, so every consumer pays one fold instead of an
-    *     i-level nested merge cascade (q224's 25-SortMergeJoin plan).
-    *   - "probes": per-batch localCheckpoint of just the probe-state
-    *     tables (measured NEGATIVE at sf0.1 — the checkpoint writes
-    *     cost more than the recompute they save; kept for A/B).
-    *   - "lazy": the r16–r18 fully-lazy nested fold. */
-  private def replayMode: String =
-    sys.env.getOrElse("GRAFT_IVM_REPLAY", "flat")
-  private def replayMatProbes: Boolean = replayMode == "probes"
-
-  /** Flat-fold replay driver: accumulates per-table batch partials;
-    * `stepParts` sees state-at-the-previous-batch as foldPartials
-    * views over them. Returns the final per-table views. */
+  /** The replay driver of the IVM gates (q218/q221/q223/q224): state-
+    * at-batch-i is ONE k-way [[IncrementalGold.fold]] view over the
+    * accumulated per-batch partials, so every consumer pays a single
+    * fold instead of an i-level nested state ⊕ Δ cascade (the fold's
+    * scaladoc records the measured plan effect). `stepParts` maps the
+    * state views before batch i to batch i's delta frames. Returns the
+    * final per-table views. */
   private def replayFold(nBatches: Int,
       initParts: => Map[String, DataFrame],
       stepParts: (Map[String, DataFrame], Int) => Map[String, DataFrame],
-      specs: Map[String, graft.streaming.VersionedStateStore.MergeSpec])
+      specs: Map[String, IncrementalGold.MergeSpec])
       : Map[String, DataFrame] = {
     var parts: Map[String, Vector[DataFrame]] =
       initParts.map { case (t, f) => t -> Vector(f) }
     def views: Map[String, DataFrame] = parts.map { case (t, fs) =>
-      t -> IncrementalGold.foldPartials(fs, specs(t).keys, specs(t).countCol)
+      t -> IncrementalGold.fold(fs, specs(t))
     }
     (1 until nBatches).foreach { i =>
       val d = stepParts(views, i)
@@ -1211,36 +1201,18 @@ object InsuranceGate extends QueryModule {
   }
 
   /** Fold all four q218 CDC batches into the policy-performance state
-    * (same feed, second maintained mart; lazy mart-grain chain per the
-    * q218 rationale, probe tables pinned per [[replayMatProbes]]). */
+    * (same feed, second maintained mart). */
   private[engine] def cdcPolicyPerfState(s: SparkSession, d: String)
       : IncrementalGold.PolicyPerfState = {
     val (pols, cls, _) = sharedCdcDeltas(s, d)
     val deltas = pols.zip(cls).map { case (p, c) =>
       (IncrementalGold.narrowPpPol(p), IncrementalGold.narrowPpCl(c)) }
-    if (replayMode == "flat") {
-      val m = replayFold(deltas.size,
-        { val (p, c) = deltas.head
-          val st = IncrementalGold.initPolicyPerf(p, c, materialize = false)
-          Map("polBase" -> st.polBase, "pt" -> st.pt, "cpm" -> st.cpm,
-            "cbt" -> st.cbt) },
-        (v, i) => { val (p, c) = deltas(i)
-          IncrementalGold.policyPerfDeltaFrames(
-            IncrementalGold.PolicyPerfState(v("polBase"), v("pt"),
-              v("cpm"), v("cbt")), p, c) },
-        graft.streaming.GoldMaintenanceStream.PerfSpecs)
-      IncrementalGold.PolicyPerfState(m("polBase"), m("pt"), m("cpm"),
-        m("cbt"))
-    } else {
-      val mp = replayMatProbes
-      deltas.tail.foldLeft(
-        IncrementalGold.initPolicyPerf(deltas.head._1, deltas.head._2,
-          materialize = false, materializeProbes = mp)) {
-        case (st, (p, c)) =>
-          IncrementalGold.applyPolicyPerfDelta(st, p, c, materialize = false,
-            materializeProbes = mp)
-      }
-    }
+    IncrementalGold.PolicyPerfState.of(replayFold(deltas.size,
+      IncrementalGold.initPolicyPerf(deltas.head._1, deltas.head._2).tables,
+      (v, i) => { val (p, c) = deltas(i)
+        IncrementalGold.policyPerfDeltaFrames(
+          IncrementalGold.PolicyPerfState.of(v), p, c) },
+      IncrementalGold.PerfSpecs))
   }
 
   /** Fold all four q218 CDC batches into maintained state. The CDC feed
@@ -1261,14 +1233,12 @@ object InsuranceGate extends QueryModule {
         IncrementalGold.narrowClDelta(c)) }
     // lazy fold: the gate replays all four batches inside ONE query, so
     // per-batch checkpoint jobs are pure overhead here (measured 15–17 s
-    // vs ~5 s; values identical — see applyDelta). Production applies
-    // one batch per run on the materialized default path.
-    deltas.tail.foldLeft(
-      IncrementalGold.init(deltas.head._1, deltas.head._2,
-        materialize = false)) {
-      case (st, (p, c)) =>
-        IncrementalGold.applyDelta(st, p, c, materialize = false)
-    }
+    // vs ~5 s; values identical). Production applies one batch per run
+    // and persists the state as a version write.
+    IncrementalGold.ExecState.of(replayFold(deltas.size,
+      IncrementalGold.init(deltas.head._1, deltas.head._2).tables,
+      (_, i) => IncrementalGold.execDeltaFrames(deltas(i)._1, deltas(i)._2),
+      IncrementalGold.ExecSpecs))
   }
 
   // ================== customer-360 IVM gate (q223, r15 verdict task 1)
@@ -1518,31 +1488,13 @@ object InsuranceGate extends QueryModule {
       (IncrementalGold.narrowC360Cust(c),
         IncrementalGold.narrowC360Pol(p),
         IncrementalGold.narrowC360Cl(cl)) }
-    if (replayMode == "flat") {
-      val m = replayFold(deltas.size,
-        { val (c, p, cl) = deltas.head
-          val st = IncrementalGold.initCustomer360(c, p, cl,
-            materialize = false)
-          Map("custDim" -> st.custDim, "polMetrics" -> st.polMetrics,
-            "polDates" -> st.polDates, "pc" -> st.pc, "cpc" -> st.cpc,
-            "cm" -> st.cm) },
-        (v, i) => { val (c, p, cl) = deltas(i)
-          IncrementalGold.customer360DeltaFrames(
-            IncrementalGold.Customer360State(v("custDim"), v("polMetrics"),
-              v("polDates"), v("pc"), v("cpc"), v("cm")), c, p, cl) },
-        graft.streaming.GoldMaintenanceStream.C360Specs)
-      IncrementalGold.Customer360State(m("custDim"), m("polMetrics"),
-        m("polDates"), m("pc"), m("cpc"), m("cm"))
-    } else {
-      val mp = replayMatProbes
-      deltas.tail.foldLeft(
-        IncrementalGold.initCustomer360(deltas.head._1, deltas.head._2,
-          deltas.head._3, materialize = false, materializeProbes = mp)) {
-        case (st, (c, p, cl)) =>
-          IncrementalGold.applyCustomer360Delta(st, c, p, cl,
-            materialize = false, materializeProbes = mp)
-      }
-    }
+    val (c0, p0, cl0) = deltas.head
+    IncrementalGold.Customer360State.of(replayFold(deltas.size,
+      IncrementalGold.initCustomer360(c0, p0, cl0).tables,
+      (v, i) => { val (c, p, cl) = deltas(i)
+        IncrementalGold.customer360DeltaFrames(
+          IncrementalGold.Customer360State.of(v), c, p, cl) },
+      IncrementalGold.C360Specs))
   }
 
   // ================== claims-operations IVM gate (q224): the TRILINEAR
@@ -1717,30 +1669,13 @@ object InsuranceGate extends QueryModule {
       (IncrementalGold.narrowCoCust(c),
         IncrementalGold.narrowCoPol(p),
         IncrementalGold.narrowCoCl(cl)) }
-    if (replayMode == "flat") {
-      val m = replayFold(deltas.size,
-        { val (c, p, cl) = deltas.head
-          val st = IncrementalGold.initClaimsOps(c, p, cl,
-            materialize = false)
-          Map("cl" -> st.cl, "p" -> st.p, "c" -> st.c, "att" -> st.att,
-            "adj" -> st.adj) },
-        (v, i) => { val (c, p, cl) = deltas(i)
-          IncrementalGold.claimsOpsDeltaFrames(
-            IncrementalGold.ClaimsOpsState(v("cl"), v("p"), v("c"),
-              v("att"), v("adj")), c, p, cl) },
-        graft.streaming.GoldMaintenanceStream.OpsSpecs)
-      IncrementalGold.ClaimsOpsState(m("cl"), m("p"), m("c"), m("att"),
-        m("adj"))
-    } else {
-      val mp = replayMatProbes
-      deltas.tail.foldLeft(
-        IncrementalGold.initClaimsOps(deltas.head._1, deltas.head._2,
-          deltas.head._3, materialize = false, materializeProbes = mp)) {
-        case (st, (c, p, cl)) =>
-          IncrementalGold.applyClaimsOpsDelta(st, c, p, cl,
-            materialize = false, materializeProbes = mp)
-      }
-    }
+    val (c0, p0, cl0) = deltas.head
+    IncrementalGold.ClaimsOpsState.of(replayFold(deltas.size,
+      IncrementalGold.initClaimsOps(c0, p0, cl0).tables,
+      (v, i) => { val (c, p, cl) = deltas(i)
+        IncrementalGold.claimsOpsDeltaFrames(
+          IncrementalGold.ClaimsOpsState.of(v), c, p, cl) },
+      IncrementalGold.OpsSpecs))
   }
 
   // customer-360 mart: 3 aggregate CTEs + 2 left joins + segmentation
@@ -2131,23 +2066,22 @@ object InsuranceGate extends QueryModule {
 
   /** One production maintenance step: write the batch's delta frames
     * (the |Δ| version write, throwaway dir), read them back, and fold
-    * state ⊕ Δ for the MART-GRAIN tables only. */
+    * state ⊕ Δ for the MART-GRAIN tables only — version 3's chain and
+    * the new Δ in ONE kernel call per table. */
   private def oneBatchMart(s: SparkSession, store: VersionedStateStore,
       deltas: Map[String, DataFrame], martTables: Seq[String],
-      specs: Map[String, VersionedStateStore.MergeSpec]): Map[String, DataFrame] = {
+      specs: Map[String, IncrementalGold.MergeSpec])
+      : Map[String, DataFrame] = {
     val out = java.nio.file.Files.createTempDirectory("graft_ivm1").toString
     graft.util.TmpReaper.track(out)
     // the per-table Δ writes are independent small jobs — overlap them
     // (guide §2.6)
     graft.streaming.VersionedStateStore.inParallel(deltas.toSeq.map {
       case (t, df) => () => df.write.mode("overwrite").parquet(s"$out/$t") })
-    // lazy: each folded table is consumed exactly once (by its merge,
-    // whose only consumer is the mart assembly)
-    val m3 = store.loadTables(3L, martTables, materialize = false)
+    // lazy: each folded table is consumed exactly once (by the mart)
     martTables.map { t =>
-      val spec = specs(t)
-      t -> IncrementalGold.merge(m3(t), s.read.parquet(s"$out/$t"),
-        spec.keys, spec.countCol)
+      t -> IncrementalGold.fold(
+        store.chain(3L, t) :+ s.read.parquet(s"$out/$t"), specs(t))
     }.toMap
   }
 
@@ -2158,16 +2092,14 @@ object InsuranceGate extends QueryModule {
     val store = ivmState3(s, d, "perf",
       dir => GoldMaintenanceStream.perfStoreD(s, dir, 3),
       { val (p, c) = pc(0)
-        val st = IncrementalGold.initPolicyPerf(p, c, materialize = false)
-        Map("polBase" -> st.polBase, "pt" -> st.pt, "cpm" -> st.cpm,
-          "cbt" -> st.cbt) },
+        IncrementalGold.initPolicyPerf(p, c).tables },
       (probe, i) => { val (p, c) = pc(i)
         IncrementalGold.policyPerfDeltaFramesKeyed(probe, p, c) })
     val (p4, c4) = pc(3)
     val deltas = IncrementalGold.policyPerfDeltaFramesKeyed(
       GoldMaintenanceStream.probeAt(store, 3L), p4, c4)
     val m = oneBatchMart(s, store, deltas, Seq("polBase", "cbt"),
-      GoldMaintenanceStream.PerfSpecs)
+      IncrementalGold.PerfSpecs)
     IncrementalGold.policyPerfMartFrom(m("polBase"), m("cbt"))
   }
 
@@ -2180,11 +2112,7 @@ object InsuranceGate extends QueryModule {
     val store = ivmState3(s, d, "c360",
       dir => GoldMaintenanceStream.c360StoreD(s, dir, 3),
       { val (cu, p, cl) = tri(0)
-        val st = IncrementalGold.initCustomer360(cu, p, cl,
-          materialize = false)
-        Map("custDim" -> st.custDim, "polMetrics" -> st.polMetrics,
-          "polDates" -> st.polDates, "pc" -> st.pc, "cpc" -> st.cpc,
-          "cm" -> st.cm) },
+        IncrementalGold.initCustomer360(cu, p, cl).tables },
       (probe, i) => { val (cu, p, cl) = tri(i)
         IncrementalGold.customer360DeltaFramesKeyed(probe, cu, p, cl) })
     val (cu4, p4, cl4) = tri(3)
@@ -2192,7 +2120,7 @@ object InsuranceGate extends QueryModule {
       GoldMaintenanceStream.probeAt(store, 3L), cu4, p4, cl4)
     val m = oneBatchMart(s, store, deltas,
       Seq("custDim", "polMetrics", "polDates", "cm"),
-      GoldMaintenanceStream.C360Specs)
+      IncrementalGold.C360Specs)
     IncrementalGold.customer360MartFrom(m("custDim"), m("polMetrics"),
       m("polDates"), m("cm"))
   }
@@ -2206,17 +2134,14 @@ object InsuranceGate extends QueryModule {
     val store = ivmState3(s, d, "ops",
       dir => GoldMaintenanceStream.opsStoreD(s, dir, 3),
       { val (cu, p, cl) = tri(0)
-        val st = IncrementalGold.initClaimsOps(cu, p, cl,
-          materialize = false)
-        Map("cl" -> st.cl, "p" -> st.p, "c" -> st.c, "att" -> st.att,
-          "adj" -> st.adj) },
+        IncrementalGold.initClaimsOps(cu, p, cl).tables },
       (probe, i) => { val (cu, p, cl) = tri(i)
         IncrementalGold.claimsOpsDeltaFramesKeyed(probe, cu, p, cl) })
     val (cu4, p4, cl4) = tri(3)
     val deltas = IncrementalGold.claimsOpsDeltaFramesKeyed(
       GoldMaintenanceStream.probeAt(store, 3L), cu4, p4, cl4)
     val m = oneBatchMart(s, store, deltas, Seq("att", "adj"),
-      GoldMaintenanceStream.OpsSpecs)
+      IncrementalGold.OpsSpecs)
     IncrementalGold.claimsOpsMartFrom(m("att"), m("adj"))
   }
 
@@ -2228,25 +2153,13 @@ object InsuranceGate extends QueryModule {
     val store = ivmState3(s, d, "exec",
       dir => GoldMaintenanceStream.execStoreD(s, dir, 3),
       { val (p, c) = pc(0)
-        val st = IncrementalGold.init(p, c, materialize = false)
-        Map("polMonths" -> st.polMonths, "polCusts" -> st.polCusts,
-          "clMonths" -> st.clMonths) },
+        IncrementalGold.init(p, c).tables },
       (_, i) => { val (p, c) = pc(i)
-        // exec is aggregate-only IVM: its delta frames ARE the batch
-        // partials (no probes)
-        Map("polMonths" -> IncrementalGold.polMonthPartials(p),
-          "polCusts" -> IncrementalGold.polCustPartials(p),
-          "clMonths" -> IncrementalGold.clMonthPartials(c)) })
+        IncrementalGold.execDeltaFrames(p, c) })
     val (p4, c4) = pc(3)
-    val deltas = Map(
-      "polMonths" -> IncrementalGold.polMonthPartials(p4),
-      "polCusts" -> IncrementalGold.polCustPartials(p4),
-      "clMonths" -> IncrementalGold.clMonthPartials(c4))
-    val m = oneBatchMart(s, store, deltas,
-      Seq("polMonths", "polCusts", "clMonths"),
-      GoldMaintenanceStream.ExecSpecs)
-    IncrementalGold.mart(IncrementalGold.ExecState(
-      m("polMonths"), m("polCusts"), m("clMonths")))
+    val m = oneBatchMart(s, store, IncrementalGold.execDeltaFrames(p4, c4),
+      Seq("polMonths", "polCusts", "clMonths"), IncrementalGold.ExecSpecs)
+    IncrementalGold.mart(IncrementalGold.ExecState.of(m))
   }
 
 }

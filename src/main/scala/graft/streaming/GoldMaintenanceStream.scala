@@ -24,10 +24,10 @@ import org.apache.spark.sql.types._
   */
 final class VersionedStateStore(spark: SparkSession, stateDir: String,
     tables: Seq[String], retain: Int = VersionedStateStore.DefaultRetain,
-    mergeSpecs: Map[String, VersionedStateStore.MergeSpec] = Map.empty,
+    mergeSpecs: Map[String, IncrementalGold.MergeSpec] = Map.empty,
     compactEvery: Int = VersionedStateStore.DefaultCompactEvery,
     clusterSpecs: Map[String, VersionedStateStore.ClusterSpec] = Map.empty) {
-  import VersionedStateStore.{ClusterSpec, MergeSpec}
+  import VersionedStateStore.ClusterSpec
   require(retain >= 1, s"retain must keep at least the newest version")
   clusterSpecs.foreach { case (t, cs) =>
     val ms = mergeSpecs.getOrElse(t, sys.error(
@@ -91,11 +91,10 @@ final class VersionedStateStore(spark: SparkSession, stateDir: String,
       case _ => read(id, t)
     }
 
-  /** State view at version `id`: the newest base at or below it plus
-    * every committed delta in between, folded by the table's merge
-    * algebra (keyed signed sums — union + groupBy-sum IS the k-fold
-    * [[graft.engine.IncrementalGold.merge]], so the reconstruction is
-    * value-exact, zero-count groups dropped the same way). */
+  /** State view at version `id`: every table's [[chain]] folded by
+    * [[graft.engine.IncrementalGold.fold]] under its MergeSpec, so the
+    * reconstruction is value-exact (zero-count groups dropped, negative
+    * multiplicities fail loudly). */
   def load(id: Long): Map[String, DataFrame] = loadTables(id, tables)
 
   /** [[load]] restricted to `wanted` tables — mart reads fold ONLY the
@@ -104,27 +103,37 @@ final class VersionedStateStore(spark: SparkSession, stateDir: String,
     * measured read floor). */
   def loadTables(id: Long, wanted: Seq[String],
       materialize: Boolean = true): Map[String, DataFrame] = {
-    val (base, deltaIds) = chainFor(id)
     // per-table fold+checkpoint jobs are independent — overlap them
     // (guide §2.6: small jobs leave the cluster idle serially)
     VersionedStateStore.inParallel(wanted.map { t => () =>
-      val frames = (base +: deltaIds).map(read(_, t))
-      if (deltaIds.isEmpty) t -> frames.head
+      val frames = chain(id, t)
+      if (frames.lengthCompare(1) == 0) t -> frames.head
       // eager checkpoint (default): the folded view is consumed several
       // times per fold on the legacy full-load path (the bilinear/
       // trilinear probes read each state table 1–3 times, plus the
       // mart) — without it the base+delta aggregation recomputes per
       // consumer (read-side shared-subtree trap, measured at the 10×
       // IVM soak). Callers whose tables each have exactly ONE consumer
-      // (the keyed mart reads, the compaction merge) pass
-      // materialize=false and inline the fold into the consumer's plan
-      // instead of paying a write+read-back of the folded view (guide
-      // §1.2: don't compute things you throw away).
+      // (the keyed mart reads) pass materialize=false and inline the
+      // fold into the consumer's plan instead of paying a write+read-
+      // back of the folded view (guide §1.2: don't compute things you
+      // throw away).
       else {
-        val folded = foldFrames(t, frames)
+        val spec = mergeSpecs.getOrElse(t, sys.error(
+          s"graft state: table $t has delta versions but no MergeSpec"))
+        val folded = IncrementalGold.fold(frames, spec)
         t -> (if (materialize) folded.localCheckpoint(true) else folded)
       }
     }).toMap
+  }
+
+  /** The frames whose fold is table `t` at version `id`: the newest
+    * base at or below it, then every committed delta in between, oldest
+    * first. A caller folding one more Δ over a version folds
+    * `chain(id, t) :+ Δ` in ONE kernel call, not a fold of a fold. */
+  def chain(id: Long, t: String): Seq[DataFrame] = {
+    val (base, deltaIds) = chainFor(id)
+    (base +: deltaIds).map(read(_, t))
   }
 
   private def chainFor(id: Long): (Long, Seq[Long]) = {
@@ -133,23 +142,6 @@ final class VersionedStateStore(spark: SparkSession, stateDir: String,
     require(deltaIds.forall(isDelta),
       s"graft state: non-delta version inside the delta chain ($deltaIds)")
     (base, deltaIds)
-  }
-
-  /** base+deltas → the table's merge-algebra fold (keyed signed sums —
-    * union + groupBy-sum IS the k-fold merge; zero-count groups drop). */
-  private def foldFrames(t: String, frames: Seq[DataFrame]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val spec = mergeSpecs.getOrElse(t, sys.error(
-      s"graft state: table $t has delta versions but no MergeSpec"))
-    val u = frames.reduce(_ unionByName _)
-    val valueCols = frames.head.columns.filterNot(spec.keys.contains)
-    val schema = frames.head.schema
-    u.groupBy(spec.keys.map(col): _*)
-      .agg(sum(col(valueCols.head)).cast(schema(valueCols.head).dataType)
-        .as(valueCols.head),
-        valueCols.tail.map(c => sum(col(c)).cast(schema(c).dataType)
-          .as(c)): _*)
-      .filter(col(spec.countCol) =!= 0)
   }
 
   /** Δ-KEYED state read (r17 verdict task 1): the folded view of table
@@ -185,7 +177,7 @@ final class VersionedStateStore(spark: SparkSession, stateDir: String,
     // checkpoint here would materialize each slice once for nothing
     // (measured at the 10× soak: it put the big-batch fold above the
     // r17 full-load path; lazy slices removed that regression)
-    if (deltaIds.isEmpty) frames.head else foldFrames(t, frames)
+    IncrementalGold.fold(frames, spec)
   }
 
   private def gc(): Unit = {
@@ -241,21 +233,14 @@ final class VersionedStateStore(spark: SparkSession, stateDir: String,
     val deltasSinceBase = bases.lastOption
       .map(b => vs.count(_ > b)).getOrElse(0)
     if (bases.isEmpty || deltasSinceBase + 1 >= compactEvery) {
-      // compact: fold the chain + this delta into a new base. Build the
-      // merged view BEFORE writing (load reads committed versions only).
-      val merged: Map[String, DataFrame] =
-        if (bases.isEmpty) deltas
-        else {
-          // lazy fold: each table has exactly one consumer here (its
-          // merge, whose only consumer is the compacted write)
-          val cur = loadTables(vs.last, tables, materialize = false)
-          tables.map { t =>
-            val spec = mergeSpecs(t)
-            t -> graft.engine.IncrementalGold.merge(cur(t), deltas(t),
-              spec.keys, spec.countCol)
-          }.toMap
-        }
-      save(id, merged)
+      // compact: fold the chain + this delta into a new base — one
+      // lazy kernel call per table, whose only consumer is the
+      // compacted write. Built BEFORE writing (chain reads committed
+      // versions only).
+      save(id, if (bases.isEmpty) deltas else tables.map { t =>
+        t -> IncrementalGold.fold(chain(vs.last, t) :+ deltas(t),
+          mergeSpecs(t))
+      }.toMap)
     } else {
       val dir = new Path(root, id.toString)
       // independent |Δ|-sized writes — overlap them (guide §2.6)
@@ -305,6 +290,13 @@ object VersionedStateStore {
     * sibling Spark write jobs running detached while the caller
     * retries into the same version directory, and a later attempt
     * could _COMMIT-mark a directory a zombie write was still mutating.
+    * The guarantee holds PER CALL, not through nesting: an inner
+    * inParallel rethrows once ITS tasks are done, while the outer
+    * call's other tasks may still run until the outer barrier.
+    *
+    * Fan-out: the pool is unbounded (one thread per concurrently
+    * running task), so callers pass SMALL task lists — today at most
+    * one task per state table or per independent probe.
     *
     * Caveat: Spark's thread-local job descriptions/groups propagate to
     * pooled threads only at THREAD CREATION (InheritableThreadLocal on
@@ -347,11 +339,6 @@ object VersionedStateStore {
       .filter(id => fs.exists(new Path(new Path(root, id.toString), "_COMMIT")))
       .toSeq.sorted
   }
-
-  /** Merge algebra of one state table: grouping keys + the column
-    * whose zero witnesses an empty (droppable) group. Every non-key
-    * column must be a signed-additive measure. */
-  final case class MergeSpec(keys: Seq[String], countCol: String)
 
   /** Key-clustered storage of a state table's BASE versions (r17
     * verdict task 1): rows land hash-bucketed by `keyCols` into
@@ -498,7 +485,8 @@ object GoldMaintenanceStream {
 
   private def perfStore(spark: SparkSession, stateDir: String,
       retain: Int): VersionedStateStore =
-    new VersionedStateStore(spark, stateDir, PerfTables, retain, PerfSpecs)
+    new VersionedStateStore(spark, stateDir, PerfTables, retain,
+      IncrementalGold.PerfSpecs)
 
   /** Highest committed state version under `stateDir`, if any.
     * Usable without an active SparkSession (driver-side tooling,
@@ -517,16 +505,14 @@ object GoldMaintenanceStream {
 
   def loadState(spark: SparkSession, stateDir: String,
       id: Long): IncrementalGold.ExecState = {
-    val t = execStore(spark, stateDir, VersionedStateStore.DefaultRetain)
-      .load(id)
-    IncrementalGold.ExecState(t("polMonths"), t("polCusts"), t("clMonths"))
+    IncrementalGold.ExecState.of(
+      execStore(spark, stateDir, VersionedStateStore.DefaultRetain).load(id))
   }
 
   def loadPerfState(spark: SparkSession, stateDir: String,
       id: Long): IncrementalGold.PolicyPerfState = {
-    val t = perfStore(spark, stateDir, VersionedStateStore.DefaultRetain)
-      .load(id)
-    IncrementalGold.PolicyPerfState(t("polBase"), t("pt"), t("cpm"), t("cbt"))
+    IncrementalGold.PolicyPerfState.of(
+      perfStore(spark, stateDir, VersionedStateStore.DefaultRetain).load(id))
   }
 
   // delta-capable stores (LSM mode needs the merge algebra at read
@@ -534,16 +520,16 @@ object GoldMaintenanceStream {
   // dominant probe key (r17 verdict task 1)
   private[graft] def perfStoreD(spark: SparkSession, stateDir: String,
       retain: Int): VersionedStateStore =
-    new VersionedStateStore(spark, stateDir, PerfTables, retain, PerfSpecs,
-      clusterSpecs = PerfClusters)
+    new VersionedStateStore(spark, stateDir, PerfTables, retain,
+      IncrementalGold.PerfSpecs, clusterSpecs = PerfClusters)
   private[graft] def c360StoreD(spark: SparkSession, stateDir: String,
       retain: Int): VersionedStateStore =
-    new VersionedStateStore(spark, stateDir, C360Tables, retain, C360Specs,
-      clusterSpecs = C360Clusters)
+    new VersionedStateStore(spark, stateDir, C360Tables, retain,
+      IncrementalGold.C360Specs, clusterSpecs = C360Clusters)
   private[graft] def opsStoreD(spark: SparkSession, stateDir: String,
       retain: Int): VersionedStateStore =
-    new VersionedStateStore(spark, stateDir, OpsTables, retain, OpsSpecs,
-      clusterSpecs = OpsClusters)
+    new VersionedStateStore(spark, stateDir, OpsTables, retain,
+      IncrementalGold.OpsSpecs, clusterSpecs = OpsClusters)
 
   /** Shared skip/fold/commit skeleton (full-copy versions). */
   private def foldWith[S](df: DataFrame, id: Long, store: VersionedStateStore,
@@ -641,39 +627,10 @@ object GoldMaintenanceStream {
     }
   }
 
-  import VersionedStateStore.MergeSpec
-  private[graft] val PerfSpecs = Map(
-    "polBase" -> MergeSpec(Seq("policy_type", "policy_month"), "n_pol"),
-    "pt" -> MergeSpec(Seq("policy_id", "policy_type"), "n"),
-    "cpm" -> MergeSpec(Seq("policy_id", "claim_month"), "n_claims"),
-    "cbt" -> MergeSpec(Seq("policy_type", "claim_month"), "n_claims"))
-  private[graft] val C360Specs = Map(
-    "custDim" -> MergeSpec(Seq("customer_id", "age", "state"), "n"),
-    "polMetrics" -> MergeSpec(Seq("customer_id"), "n_pol"),
-    "polDates" -> MergeSpec(Seq("customer_id", "start_date"), "n"),
-    "pc" -> MergeSpec(Seq("policy_id", "customer_id"), "n"),
-    "cpc" -> MergeSpec(Seq("policy_id"), "n_claims"),
-    "cm" -> MergeSpec(Seq("customer_id"), "n_claims"))
-  private[graft] val OpsSpecs = Map(
-    "cl" -> MergeSpec(Seq("policy_id", "claim_type", "severity", "status",
-      "adjuster_id", "claim_month"), "n"),
-    "p" -> MergeSpec(Seq("policy_id", "customer_id", "policy_type"), "n"),
-    "c" -> MergeSpec(Seq("customer_id", "state", "age"), "n"),
-    "att" -> MergeSpec(Seq("claim_type", "severity", "status",
-      "adjuster_id", "claim_month", "policy_type", "customer_state",
-      "customer_age"), "n"),
-    "adj" -> MergeSpec(Seq("adjuster_id"), "n_handled"))
-
-  // exec-summary merge algebra (the keys/countCols applyDelta merges
-  // with) — used by the LSM/one-batch paths; the streaming exec fold
-  // itself stays full-copy (its state is bounded, r16 measurement)
-  private[graft] val ExecSpecs = Map(
-    "polMonths" -> MergeSpec(Seq("report_period"), "n_pol"),
-    "polCusts" -> MergeSpec(Seq("report_period", "customer_id"), "n"),
-    "clMonths" -> MergeSpec(Seq("report_period"), "n_claims"))
   private[graft] def execStoreD(spark: SparkSession, stateDir: String,
       retain: Int): VersionedStateStore =
-    new VersionedStateStore(spark, stateDir, ExecTables, retain, ExecSpecs)
+    new VersionedStateStore(spark, stateDir, ExecTables, retain,
+      IncrementalGold.ExecSpecs)
 
   import VersionedStateStore.ClusterSpec
 
@@ -732,14 +689,11 @@ object GoldMaintenanceStream {
         val pol = IncrementalGold.narrowPolDelta(p)
         val cl = IncrementalGold.narrowClDelta(c)
         prev match {
-          case Some(st) =>
-            IncrementalGold.applyDelta(st, pol, cl, materialize = false)
-          case None => IncrementalGold.init(pol, cl, materialize = false)
+          case Some(st) => IncrementalGold.applyDelta(st, pol, cl)
+          case None => IncrementalGold.init(pol, cl)
         }
       },
-      st => Map("polMonths" -> st.polMonths, "polCusts" -> st.polCusts,
-        "clMonths" -> st.clMonths),
-      IncrementalGold.mart)
+      _.tables, IncrementalGold.mart)
   }
 
   /** One CDC record of an AT-LEAST-ONCE feed: [[GoldCdc]] plus the
@@ -773,8 +727,7 @@ object GoldMaintenanceStream {
       retain)
     def load(v: Long): S = {
       val t = store.load(v)
-      (IncrementalGold.ExecState(t("polMonths"), t("polCusts"),
-        t("clMonths")), t("ledgerPolicy"), t("ledgerClaim"))
+      (IncrementalGold.ExecState.of(t), t("ledgerPolicy"), t("ledgerClaim"))
     }
     def parsed(batch: DataFrame, entity: String,
         schema: StructType): DataFrame =
@@ -802,16 +755,14 @@ object GoldMaintenanceStream {
         val cl = IncrementalGold.narrowClDelta(IncrementalGold.signedDelta(
           CdcIngest.collapse(clFresh).select("op", "before", "after")))
         val st = prev match {
-          case Some((s, _, _)) =>
-            IncrementalGold.applyDelta(s, pol, cl, materialize = false)
-          case None => IncrementalGold.init(pol, cl, materialize = false)
+          case Some((s, _, _)) => IncrementalGold.applyDelta(s, pol, cl)
+          case None => IncrementalGold.init(pol, cl)
         }
         (st, CdcIngest.advanceLedger(polLedger0, polFresh),
           CdcIngest.advanceLedger(clLedger0, clFresh))
       },
-      { case (st, pl, cll) => Map("polMonths" -> st.polMonths,
-        "polCusts" -> st.polCusts, "clMonths" -> st.clMonths,
-        "ledgerPolicy" -> pl, "ledgerClaim" -> cll) },
+      { case (st, pl, cll) =>
+        st.tables ++ Map("ledgerPolicy" -> pl, "ledgerClaim" -> cll) },
       s => IncrementalGold.mart(s._1))
   }
 
@@ -845,9 +796,7 @@ object GoldMaintenanceStream {
       (IncrementalGold.narrowPpPol(p), IncrementalGold.narrowPpCl(c)) }
     foldDeltaKeyed(df, id, perfStoreD(spark, stateDir, retain),
       _ => { val (pol, cl) = deltas
-        val st = IncrementalGold.initPolicyPerf(pol, cl, materialize = false)
-        Map("polBase" -> st.polBase, "pt" -> st.pt, "cpm" -> st.cpm,
-          "cbt" -> st.cbt) },
+        IncrementalGold.initPolicyPerf(pol, cl).tables },
       (probe, _) => { val (pol, cl) = deltas
         IncrementalGold.policyPerfDeltaFramesKeyed(probe, pol, cl) },
       Seq("polBase", "cbt"),
@@ -869,12 +818,10 @@ object GoldMaintenanceStream {
       compactEvery: Int = 2): DataFrame = {
     require(deltas.size >= 3, "need a base + enough deltas to compact")
     val store = new VersionedStateStore(spark, stateDir, PerfTables,
-      VersionedStateStore.DefaultRetain, PerfSpecs, compactEvery,
-      clusterSpecs = PerfClusters)
-    val init = IncrementalGold.initPolicyPerf(deltas.head._1,
-      deltas.head._2, materialize = false)
-    store.save(1L, Map("polBase" -> init.polBase, "pt" -> init.pt,
-      "cpm" -> init.cpm, "cbt" -> init.cbt))
+      VersionedStateStore.DefaultRetain, IncrementalGold.PerfSpecs,
+      compactEvery, clusterSpecs = PerfClusters)
+    store.save(1L,
+      IncrementalGold.initPolicyPerf(deltas.head._1, deltas.head._2).tables)
     deltas.tail.zipWithIndex.foreach { case ((pol, cl), i) =>
       // each batch folds against the DURABLE state read back from the
       // store — the production shape (r18: through Δ-KEYED bucket-
@@ -906,18 +853,14 @@ object GoldMaintenanceStream {
 
   def loadC360State(spark: SparkSession, stateDir: String,
       id: Long): IncrementalGold.Customer360State = {
-    val t = c360StoreD(spark, stateDir,
-      VersionedStateStore.DefaultRetain).load(id)
-    IncrementalGold.Customer360State(t("custDim"), t("polMetrics"),
-      t("polDates"), t("pc"), t("cpc"), t("cm"))
+    IncrementalGold.Customer360State.of(
+      c360StoreD(spark, stateDir, VersionedStateStore.DefaultRetain).load(id))
   }
 
   def loadOpsState(spark: SparkSession, stateDir: String,
       id: Long): IncrementalGold.ClaimsOpsState = {
-    val t = opsStoreD(spark, stateDir,
-      VersionedStateStore.DefaultRetain).load(id)
-    IncrementalGold.ClaimsOpsState(t("cl"), t("p"), t("c"), t("att"),
-      t("adj"))
+    IncrementalGold.ClaimsOpsState.of(
+      opsStoreD(spark, stateDir, VersionedStateStore.DefaultRetain).load(id))
   }
 
   /** [[foldBatch]]'s twin for the customer-360 mart (three entities on
@@ -941,11 +884,7 @@ object GoldMaintenanceStream {
         IncrementalGold.narrowC360Cl(c)) }
     foldDeltaKeyed(df, id, c360StoreD(spark, stateDir, retain),
       _ => { val (cu, pol, cl) = deltas
-        val st = IncrementalGold.initCustomer360(cu, pol, cl,
-          materialize = false)
-        Map("custDim" -> st.custDim, "polMetrics" -> st.polMetrics,
-          "polDates" -> st.polDates, "pc" -> st.pc, "cpc" -> st.cpc,
-          "cm" -> st.cm) },
+        IncrementalGold.initCustomer360(cu, pol, cl).tables },
       (probe, _) => { val (cu, pol, cl) = deltas
         IncrementalGold.customer360DeltaFramesKeyed(probe, cu, pol, cl) },
       Seq("custDim", "polMetrics", "polDates", "cm"),
@@ -973,10 +912,7 @@ object GoldMaintenanceStream {
         IncrementalGold.narrowCoCl(c)) }
     foldDeltaKeyed(df, id, opsStoreD(spark, stateDir, retain),
       _ => { val (cu, pol, cl) = deltas
-        val st = IncrementalGold.initClaimsOps(cu, pol, cl,
-          materialize = false)
-        Map("cl" -> st.cl, "p" -> st.p, "c" -> st.c, "att" -> st.att,
-          "adj" -> st.adj) },
+        IncrementalGold.initClaimsOps(cu, pol, cl).tables },
       (probe, _) => { val (cu, pol, cl) = deltas
         IncrementalGold.claimsOpsDeltaFramesKeyed(probe, cu, pol, cl) },
       Seq("att", "adj"),

@@ -22,6 +22,9 @@ import org.apache.spark.sql.types.DateType
   * updates, deletes, AND filter transitions exactly.
   */
 class IncrementalGoldSpec extends SparkSpec {
+  import IncrementalGold.{ClaimsOpsState, Customer360State, ExecState,
+    PolicyPerfState}
+  import IncrementalGoldSpec.{messages, pinned}
   private val sf = "/root/testdata/sf0.001"
 
   /** Row-level multiset replay of signed deltas — the reference state. */
@@ -59,12 +62,13 @@ class IncrementalGoldSpec extends SparkSpec {
       (IncrementalGold.signedDelta(p).localCheckpoint(true),
         IncrementalGold.signedDelta(c).localCheckpoint(true))
     }
-    var st = IncrementalGold.init(deltas.head._1, deltas.head._2)
+    var st = ExecState.of(pinned(
+      IncrementalGold.init(deltas.head._1, deltas.head._2).tables))
     assertSame(IncrementalGold.mart(st),
       fullRefresh(replay(Seq(deltas.head._1)), replay(Seq(deltas.head._2))),
       "prefix 1 (initial load)")
     deltas.tail.zipWithIndex.foreach { case ((p, c), i) =>
-      st = IncrementalGold.applyDelta(st, p, c)
+      st = ExecState.of(pinned(IncrementalGold.applyDelta(st, p, c).tables))
       val upTo = deltas.take(i + 2)
       assertSame(IncrementalGold.mart(st),
         fullRefresh(replay(upTo.map(_._1)), replay(upTo.map(_._2))),
@@ -102,13 +106,15 @@ class IncrementalGoldSpec extends SparkSpec {
       (IncrementalGold.signedDelta(p).localCheckpoint(true),
         IncrementalGold.signedDelta(c).localCheckpoint(true))
     }
-    var st = IncrementalGold.initPolicyPerf(deltas.head._1, deltas.head._2)
+    var st = PolicyPerfState.of(pinned(
+      IncrementalGold.initPolicyPerf(deltas.head._1, deltas.head._2).tables))
     assertSame(IncrementalGold.policyPerfMart(st),
       fullRefreshPerf(replay(Seq(deltas.head._1)),
         replay(Seq(deltas.head._2))),
       "perf prefix 1 (initial load)")
     deltas.tail.zipWithIndex.foreach { case ((p, c), i) =>
-      st = IncrementalGold.applyPolicyPerfDelta(st, p, c)
+      st = PolicyPerfState.of(pinned(
+        IncrementalGold.applyPolicyPerfDelta(st, p, c).tables))
       val upTo = deltas.take(i + 2)
       assertSame(IncrementalGold.policyPerfMart(st),
         fullRefreshPerf(replay(upTo.map(_._1)), replay(upTo.map(_._2))),
@@ -169,14 +175,15 @@ class IncrementalGoldSpec extends SparkSpec {
       (IncrementalGold.signedDelta(c).localCheckpoint(true),
         IncrementalGold.signedDelta(p).localCheckpoint(true),
         IncrementalGold.signedDelta(cl).localCheckpoint(true)) }
-    var st = IncrementalGold.initCustomer360(
-      deltas.head._1, deltas.head._2, deltas.head._3)
+    var st = Customer360State.of(pinned(IncrementalGold.initCustomer360(
+      deltas.head._1, deltas.head._2, deltas.head._3).tables))
     assertSame(IncrementalGold.customer360Mart(st),
       fullRefresh360(replay(Seq(deltas.head._1)),
         replay(Seq(deltas.head._2)), replay(Seq(deltas.head._3))),
       "c360 prefix 1 (initial load)")
     deltas.tail.zipWithIndex.foreach { case ((c, p, cl), i) =>
-      st = IncrementalGold.applyCustomer360Delta(st, c, p, cl)
+      st = Customer360State.of(pinned(
+        IncrementalGold.applyCustomer360Delta(st, c, p, cl).tables))
       val upTo = deltas.take(i + 2)
       assertSame(IncrementalGold.customer360Mart(st),
         fullRefresh360(replay(upTo.map(_._1)), replay(upTo.map(_._2)),
@@ -255,14 +262,15 @@ class IncrementalGoldSpec extends SparkSpec {
       (IncrementalGold.signedDelta(c).localCheckpoint(true),
         IncrementalGold.signedDelta(p).localCheckpoint(true),
         IncrementalGold.signedDelta(cl).localCheckpoint(true)) }
-    var st = IncrementalGold.initClaimsOps(
-      deltas.head._1, deltas.head._2, deltas.head._3)
+    var st = ClaimsOpsState.of(pinned(IncrementalGold.initClaimsOps(
+      deltas.head._1, deltas.head._2, deltas.head._3).tables))
     assertSame(IncrementalGold.claimsOpsMart(st),
       fullRefreshOps(replay(Seq(deltas.head._1)),
         replay(Seq(deltas.head._2)), replay(Seq(deltas.head._3))),
       "claims-ops prefix 1 (initial load)")
     deltas.tail.zipWithIndex.foreach { case ((c, p, cl), i) =>
-      st = IncrementalGold.applyClaimsOpsDelta(st, c, p, cl)
+      st = ClaimsOpsState.of(pinned(
+        IncrementalGold.applyClaimsOpsDelta(st, c, p, cl).tables))
       val upTo = deltas.take(i + 2)
       assertSame(IncrementalGold.claimsOpsMart(st),
         fullRefreshOps(replay(upTo.map(_._1)), replay(upTo.map(_._2)),
@@ -288,15 +296,17 @@ class IncrementalGoldSpec extends SparkSpec {
     st = IncrementalGold.applyDelta(st, deltas(2)._1, deltas(2)._2)
     // replay batch 3's policy DELETE a second time: those rows are
     // already gone, so the (month, customer) multiplicity nets negative
-    // — the merge guard must fail the job, not let the mart drift
-    val e = intercept[Exception] {
-      IncrementalGold.applyDelta(st, deltas(2)._1, deltas(2)._2)
-        .polCusts.count()
+    // — the fold guard must fail the job, not let the mart drift. The
+    // state stays LAZY (as every maintainer folds it), and the mart
+    // reads polCusts only as count(1) per month — a consumer that never
+    // reads the count column the guard checks.
+    val bad = IncrementalGold.applyDelta(st, deltas(2)._1, deltas(2)._2)
+    Seq[() => Any](() => IncrementalGold.mart(bad).collect(),
+      () => bad.polCusts.count()).foreach { consume =>
+      val e = intercept[Exception](consume())
+      assert(messages(e).exists(_.contains("negative multiplicity")),
+        s"expected the negative-multiplicity guard, got: ${e.getMessage}")
     }
-    def msgs(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
-    assert(msgs(e).exists(_.contains("negative multiplicity")),
-      s"expected the negative-multiplicity guard, got: ${e.getMessage}")
   }
 
   test("deletes retire customers and months from the auxiliary state") {
@@ -315,4 +325,17 @@ class IncrementalGoldSpec extends SparkSpec {
     assert(st3.polMonths.filter(col("n_pol") <= 0).count() === 0)
     assert(st3.clMonths.filter(col("n_claims") <= 0).count() === 0)
   }
+}
+
+object IncrementalGoldSpec {
+  /** Every message along a throwable's cause chain. */
+  def messages(t: Throwable): Seq[String] =
+    Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++
+      messages(x.getCause))
+
+  /** State pinned between batches: the folds are lazy, and a spec that
+    * reads every intermediate state would otherwise re-derive the whole
+    * prior chain per read. */
+  def pinned(tables: Map[String, DataFrame]): Map[String, DataFrame] =
+    tables.map { case (t, df) => t -> df.localCheckpoint(true) }
 }

@@ -14,6 +14,8 @@ import org.apache.spark.sql.functions._
   * deletes, delete-then-resurrect, and claims deletes, so the probes
   * see retractions and re-attributions, not just appends. */
 class KeyedIvmSpec extends SparkSpec {
+  import IncrementalGold.{ClaimsOpsState, Customer360State, PolicyPerfState}
+  import IncrementalGoldSpec.pinned
   private val sf = "/root/testdata/sf0.001"
 
   private lazy val pc = InsuranceGate.cdcBatches(spark, sf).map {
@@ -37,7 +39,8 @@ class KeyedIvmSpec extends SparkSpec {
 
   test("policy-perf: keyed delta frames == full-state delta frames " +
       "after every batch") {
-    var st = IncrementalGold.initPolicyPerf(pc.head._1, pc.head._2)
+    var st = PolicyPerfState.of(pinned(
+      IncrementalGold.initPolicyPerf(pc.head._1, pc.head._2).tables))
     pc.tail.zipWithIndex.foreach { case ((p, c), i) =>
       val probe = IncrementalGold.FrameProbe(
         Map("pt" -> st.pt, "cpm" -> st.cpm))
@@ -45,13 +48,15 @@ class KeyedIvmSpec extends SparkSpec {
         IncrementalGold.policyPerfDeltaFrames(st, p, c),
         IncrementalGold.policyPerfDeltaFramesKeyed(probe, p, c),
         s"perf batch ${i + 2}")
-      st = IncrementalGold.applyPolicyPerfDelta(st, p, c)
+      st = PolicyPerfState.of(pinned(
+        IncrementalGold.applyPolicyPerfDelta(st, p, c).tables))
     }
   }
 
   test("customer-360: keyed delta frames == full-state delta frames " +
       "after every batch") {
-    var st = IncrementalGold.initCustomer360(cu.head, pc.head._1, pc.head._2)
+    var st = Customer360State.of(pinned(IncrementalGold.initCustomer360(
+      cu.head, pc.head._1, pc.head._2).tables))
     pc.tail.zipWithIndex.foreach { case ((p, c), i) =>
       val probe = IncrementalGold.FrameProbe(
         Map("pc" -> st.pc, "cpc" -> st.cpc))
@@ -59,13 +64,15 @@ class KeyedIvmSpec extends SparkSpec {
         IncrementalGold.customer360DeltaFrames(st, cu(i + 1), p, c),
         IncrementalGold.customer360DeltaFramesKeyed(probe, cu(i + 1), p, c),
         s"c360 batch ${i + 2}")
-      st = IncrementalGold.applyCustomer360Delta(st, cu(i + 1), p, c)
+      st = Customer360State.of(pinned(
+        IncrementalGold.applyCustomer360Delta(st, cu(i + 1), p, c).tables))
     }
   }
 
   test("claims-ops (trilinear): keyed delta frames == full-state delta " +
       "frames after every batch, dependent customer probe included") {
-    var st = IncrementalGold.initClaimsOps(cu.head, pc.head._1, pc.head._2)
+    var st = ClaimsOpsState.of(pinned(IncrementalGold.initClaimsOps(
+      cu.head, pc.head._1, pc.head._2).tables))
     pc.tail.zipWithIndex.foreach { case ((p, c), i) =>
       val probe = IncrementalGold.FrameProbe(
         Map("cl" -> st.cl, "p" -> st.p, "c" -> st.c))
@@ -73,7 +80,8 @@ class KeyedIvmSpec extends SparkSpec {
         IncrementalGold.claimsOpsDeltaFrames(st, cu(i + 1), p, c),
         IncrementalGold.claimsOpsDeltaFramesKeyed(probe, cu(i + 1), p, c),
         s"ops batch ${i + 2}")
-      st = IncrementalGold.applyClaimsOpsDelta(st, cu(i + 1), p, c)
+      st = ClaimsOpsState.of(pinned(
+        IncrementalGold.applyClaimsOpsDelta(st, cu(i + 1), p, c).tables))
     }
     // non-vacuity: at least one later batch's probes must have hit a
     // STRICT subset of the state (otherwise "keyed" degenerated to a

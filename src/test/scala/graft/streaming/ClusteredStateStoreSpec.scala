@@ -15,7 +15,8 @@ import org.apache.spark.sql.types._
   * one corrupted sum would drift every downstream mart. */
 class ClusteredStateStoreSpec extends SparkSpec {
   import spark.implicits._
-  import VersionedStateStore.{ClusterSpec, MergeSpec}
+  import VersionedStateStore.ClusterSpec
+  import graft.engine.IncrementalGold.MergeSpec
 
   private def tmp(p: String): String =
     java.nio.file.Files.createTempDirectory(p).toString
@@ -167,5 +168,31 @@ class ClusteredStateStoreSpec extends SparkSpec {
       .collect().toSeq === Seq(6L), "compacted fold drifted")
     assertSame(st.sliceKeyed(3L, "t", Seq("k1").toDF("k")),
       expect.filter(col("k") === "k1"), "slice over compacted base")
+  }
+
+  test("a negative multiplicity in a store chain fails loudly through " +
+      "load and sliceKeyed, in the pairwise and the k-way fold") {
+    val dir = tmp("cst_neg")
+    val st = store(dir)
+    st.save(1L, Map("t" -> rows(20).localCheckpoint(true)))
+    // k0 holds n = 1 in the base: retracting it twice nets it to -1
+    st.saveDelta(2L, Map("t" -> rows(1).withColumn("n", lit(-2L))))
+    st.saveDelta(3L, Map("t" -> rows(3).filter(col("k") === "k2")))
+    val k0 = Seq("k0").toDF("k")
+    // version 2 = base + one delta (pairwise form), version 3 = base +
+    // two deltas (k-way form); every read below skips the count column
+    for (v <- Seq(2L, 3L)) {
+      Seq[(String, () => Any)](
+        "load" -> (() => st.load(v)("t").select("k").collect()),
+        "lazy load" -> (() =>
+          st.loadTables(v, Seq("t"), materialize = false)("t").count()),
+        "sliceKeyed" -> (() => st.sliceKeyed(v, "t", k0).count())
+      ).foreach { case (what, read) =>
+        val e = intercept[Exception](read())
+        assert(graft.engine.IncrementalGoldSpec.messages(e)
+            .exists(_.contains("negative multiplicity")),
+          s"version $v $what: expected the guard, got ${e.getMessage}")
+      }
+    }
   }
 }

@@ -427,7 +427,8 @@ class GoldStreamSpec extends SparkSpec {
     import spark.implicits._
     val stateDir =
       java.nio.file.Files.createTempDirectory("lsm_gc_state").toString
-    val spec = Map("t" -> VersionedStateStore.MergeSpec(Seq("k"), "n"))
+    val spec =
+      Map("t" -> graft.engine.IncrementalGold.MergeSpec(Seq("k"), "n"))
     val store = new VersionedStateStore(spark, stateDir, Seq("t"),
       retain = 2, mergeSpecs = spec, compactEvery = 2)
     def d(rows: (Long, Long)*): Map[String, DataFrame] =
