@@ -70,7 +70,7 @@ object StringScanAb {
     val t = s"$cat.g.orders_strings"
     spark.sql(s"CREATE TABLE $t (key BIGINT, bucket BIGINT, " +
       "payload STRING, hi_card STRING) PARTITIONED BY (bucket) " +
-      "TBLPROPERTIES ('filePerKey'='true', 'format'='parquet')")
+      "TBLPROPERTIES ('filePerKey'='true')")
     val (_, etlG) = timed { content.writeTo(t).append() }
 
     // backend B: native parquet, same content, same bucket layout

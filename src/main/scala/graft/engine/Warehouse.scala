@@ -85,7 +85,10 @@ object Warehouse {
   /** Adopt a persisted table: Some(properties) when it exists, carries
     * every `required` property, and holds at least one committed row;
     * otherwise the partial table is DROPPED and None returned so the
-    * caller rebuilds. Caller holds its family's build lock. */
+    * caller rebuilds. A table the catalog refuses to load (one written
+    * with the deleted JSON-lines payload) is None too; the caller's
+    * build path drops it before it creates the new one. Caller holds
+    * its family's build lock. */
   def adopt(iso: SparkSession, ident: String,
       required: Seq[String]): Option[Map[String, String]] = {
     if (scala.util.Try(iso.table(ident)).isFailure) None

@@ -804,8 +804,8 @@ object GraphOps extends QueryModule {
   // size-conditional (BucketedBfsSpec asserts no exchange ever sits
   // above the bucketed scan).
   //
-  // Why Spark-native bucketed parquet and not the JSON-lines
-  // ClusteredSink: the demonstration is STORAGE PARTITIONING, and at
+  // Why Spark-native bucketed parquet and not the ClusteredSink (a
+  // JSON-lines payload when this family was written): the demonstration is STORAGE PARTITIONING, and at
   // the organic soaks a toy row-format's parse cost would dominate and
   // misrepresent it; bucketBy+saveAsTable is the exact layout a
   // 100 TB warehouse would carry (one-time ETL shuffle amortized over
@@ -986,15 +986,13 @@ object GraphOps extends QueryModule {
     * content-addressed write-once contract as [[bucketedEdgeTable]]
     * (the warehouse is a per-JVM temp dir, so no pid in the name).
     * Returns (src, dst, bucket) from the SPJ-configured child session;
-    * bucket = pmod(src, [[Q201Buckets]]). Payload defaults to the
-    * sink's COLUMNAR format (r14: `format=parquet` closed the measured
-    * 1.26× row-format gap of the json payload — EdgeBackendAb); pass
-    * "json" to A/B the row format. */
-  def graftEdgeTable(s: SparkSession, d: String,
-      format: String = "parquet"): DataFrame = {
+    * bucket = pmod(src, [[Q201Buckets]]). Segments are parquet, the
+    * sink's only payload; a table left in a durable warehouse by the
+    * deleted JSON-lines payload under the same name fails to load, so
+    * adopt skips it and the build below drops and rebuilds it. */
+  def graftEdgeTable(s: SparkSession, d: String): DataFrame = {
     val iso = graftEdgeSession(s)
-    val fmtTag = if (format == "json") "" else s"_$format"
-    val ident = s"$GraftEdgeCat.g.edges_${datasetFingerprint(d)}$fmtTag"
+    val ident = s"$GraftEdgeCat.g.edges_${datasetFingerprint(d)}"
     edgeEtlLock.synchronized {
       if (edgeEtlAlways || !writtenEdgeTables.contains(ident)) {
         // cross-JVM adopt first (durable warehouse surviving a restart):
@@ -1009,8 +1007,7 @@ object GraphOps extends QueryModule {
           iso.sql(s"DROP TABLE IF EXISTS $ident")
           iso.sql(s"CREATE TABLE $ident " +
             "(src BIGINT, dst BIGINT, bucket BIGINT) PARTITIONED BY (bucket) " +
-            "TBLPROPERTIES ('filePerKey'='true', 'sortBy'='src', " +
-            s"'format'='$format')")
+            "TBLPROPERTIES ('filePerKey'='true', 'sortBy'='src')")
           tradeEdgesPlan(iso, d)
             .select(col("src").cast(LongType).as("src"),
               col("dst").cast(LongType).as("dst"))
@@ -1235,8 +1232,7 @@ object GraphOps extends QueryModule {
           iso.sql(s"CREATE TABLE $ident " +
             s"(src ${srcT.get}, dst ${dstT.get}, bucket BIGINT) " +
             "PARTITIONED BY (bucket) " +
-            "TBLPROPERTIES ('filePerKey'='true', 'sortBy'='src', " +
-            "'format'='parquet')")
+            "TBLPROPERTIES ('filePerKey'='true', 'sortBy'='src')")
           // writeTo resolves its identifier against the FRAME's session,
           // where the edge catalog isn't registered — bridge the caller's
           // frame into the iso session through a global temp view

@@ -51,9 +51,9 @@ object SourceGate extends QueryModule {
   // Full connector write path: orders is projected to (key, bucket,
   // payload), written through graft-sink — Catalyst inserts the
   // clustered-by-bucket shuffle + (bucket, key) sort the sink REQUIRES
-  // via RequiresDistributionAndOrdering, tasks two-phase-commit JSON
-  // files + a stats manifest — then read back from the committed files
-  // and re-aggregated. The oracle computes the same aggregation from the
+  // via RequiresDistributionAndOrdering, tasks two-phase-commit parquet
+  // segments + a stats manifest — then read back from the committed
+  // files with Spark's own parquet reader and re-aggregated. The oracle computes the same aggregation from the
   // original parquet: any row lost, duplicated, or corrupted by the
   // write path breaks the hash. Layout invariants (bucket→one file,
   // in-file sort, manifest min/max) are ClusteredSinkSpec's territory;
@@ -75,7 +75,7 @@ object SourceGate extends QueryModule {
       .write.format("graft-sink")
       .option("path", out).option("clusterBy", "bucket").option("sortBy", "key")
       .option("partitions", "8").mode("append").save()
-    s.read.schema("key LONG, bucket LONG, payload STRING").json(out + "/data")
+    s.read.schema("key LONG, bucket LONG, payload STRING").parquet(out + "/data")
       .groupBy("bucket")
       .agg(count(lit(1)).as("n"),
         sum("key").as("sum_key"),
@@ -239,7 +239,7 @@ object SourceGate extends QueryModule {
         lower(col("payload")).as("payload"))
       .writeTo(t).overwritePartitions()
     s.read.schema("key LONG, bucket LONG, payload STRING")
-      .json(SourceGate.q195Warehouse + "/g/orders_mart/data")
+      .parquet(SourceGate.q195Warehouse + "/g/orders_mart/data")
       .groupBy("bucket")
       .agg(count(lit(1)).as("n"),
         sum("key").as("sum_key"),
@@ -256,12 +256,13 @@ object SourceGate extends QueryModule {
     p.toString
   }
 
-  // q222 — q195's overwrite algebra on the PARQUET payload (r15: the
+  // q222 — q195's overwrite algebra read back through the catalog (the
   // copy-on-write rewrite decodes and re-encodes parquet segments
   // through the sink's own reader/writer). Identical mutation algebra →
-  // the SAME oracle shape; the read-back goes through spark.table(),
-  // i.e. the manifest-planned scan, so a survivor row the parquet
-  // rewrite corrupts OR a manifest entry it mis-stats breaks the hash.
+  // the SAME oracle shape; where q195 reads the committed segments raw,
+  // q222's read-back goes through spark.table(), i.e. the
+  // manifest-planned scan, so a survivor row the rewrite corrupts OR a
+  // manifest entry it mis-stats breaks the hash.
   register("q222_parquet_overwrite_roundtrip",
     """WITH base AS (
       |  SELECT CAST(o_orderkey AS BIGINT) AS key,
@@ -290,8 +291,7 @@ object SourceGate extends QueryModule {
     s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.g")
     s.sql(s"DROP TABLE IF EXISTS $cat.g.orders_mart")
     s.sql(s"CREATE TABLE $cat.g.orders_mart " +
-      "(key BIGINT, bucket BIGINT, payload STRING) PARTITIONED BY (bucket) " +
-      "TBLPROPERTIES ('format'='parquet')")
+      "(key BIGINT, bucket BIGINT, payload STRING) PARTITIONED BY (bucket)")
     val t = s"$cat.g.orders_mart"
     val base = graft.ops.Tables.orders(s, dir)
       .select(col("o_orderkey").cast("long").as("key"),
@@ -374,7 +374,7 @@ object SourceGate extends QueryModule {
     SourceGate.q229Lock.synchronized {
     s.sql(s"DROP TABLE IF EXISTS $t")
     s.sql(s"CREATE TABLE $t (key BIGINT, bucket BIGINT, amount DOUBLE) " +
-      "PARTITIONED BY (bucket) TBLPROPERTIES ('format'='parquet')")
+      "PARTITIONED BY (bucket)")
     val base = graft.ops.Tables.orders(s, dir)
       .select(col("o_orderkey").cast("long").as("key"),
         (col("o_custkey") % 16).cast("long").as("bucket"),

@@ -45,29 +45,29 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     parquet footers give a file source (ClusteredSinkSpec checks the
   *     manifest against actual file contents).
   *
-  * Rows are written as JSON lines (schema-driven, full string escaping),
-  * readable back with `spark.read.schema(...).json(dir + "/data")` — the
-  * format is deliberately trivial because the CONNECTOR surface (required
-  * distribution, commit protocol, manifest) is the subject here, not the
-  * encoding. Supported column types: LONG/INT/DOUBLE/BOOLEAN/STRING;
-  * `clusterBy`/`sortBy` must be integral.
+  * Each committed file is a parquet segment ([[ClusteredSinkFormat]]),
+  * readable back with `spark.read.schema(...).parquet(dir + "/data")` or,
+  * through the manifest, with [[ClusteredSinkScan]]. Supported column
+  * types: LONG/INT/DOUBLE/BOOLEAN/STRING; `clusterBy`/`sortBy` must be
+  * integral.
   *
   * Options: `path` (output directory), `clusterBy`, `sortBy`,
   * `partitions` (exact shuffle partition count for the write, 0 = let
-  * Spark choose). Modes: `append`, `overwrite` (truncates via
-  * `SupportsTruncate`).
+  * Spark choose), `filePerKey`. A `format` option other than `parquet`
+  * fails the write before any task runs. Modes: `append`, `overwrite`
+  * (truncates via `SupportsTruncate`).
   *
   * SINGLE-WRITER CONTRACT (r10 ADVICE): at most one writer — batch OR
   * streaming — may target a path at a time. The overwrite commit's
   * orphan sweep treats `_manifest.jsonl` as the sole source of truth and
-  * deletes unreferenced `part-*.json` files from `data/`; a concurrent
+  * deletes unreferenced `part-*.parquet` files from `data/`; a concurrent
   * append or streaming epoch whose files land before its manifest line
   * is readable would lose committed data to the sweep. This is the same
   * contract HDFS-committer tables have (no table-level lock service
   * here); a deployment needing concurrent writers fronts the path with a
   * catalog that serializes commits ([[GraftCatalog]] does exactly that
   * for its managed tables). The sweep only ever touches files matching
-  * this sink's own `part-*.json` naming, so foreign files a user drops
+  * this sink's own `part-*.parquet` naming, so foreign files a user drops
   * into `data/` are never deleted.
   */
 final class ClusteredSink extends TableProvider with DataSourceRegister {
@@ -92,24 +92,8 @@ object ClusteredSink {
     StructField("bucket", LongType),
     StructField("payload", StringType)))
 
-  /** Minimal complete JSON string escaper (quote, backslash, control). */
-  def escape(s: String): String = {
-    val b = new StringBuilder(s.length + 8)
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '"'           => b.append("\\\"")
-        case '\\'          => b.append("\\\\")
-        case '\n'          => b.append("\\n")
-        case '\r'          => b.append("\\r")
-        case '\t'          => b.append("\\t")
-        case c if c < ' '  => b.append(f"\\u${c.toInt}%04x")
-        case c             => b.append(c)
-      }
-      i += 1
-    }
-    b.toString
-  }
+  /** Committed segment file extension. */
+  val Ext = ".parquet"
 }
 
 final class ClusteredSinkTable(
@@ -199,12 +183,12 @@ final class ClusteredSinkTable(
       Option(info.options.get(k)).orElse(Option(tblProps.get(k)))
     val path = opt("path").getOrElse(
       sys.error("graft-sink requires a 'path' option"))
+    ClusteredSinkFormat.requireParquet(opt("format"))
     new ClusteredSinkWriteBuilder(info.schema(), path,
       opt("clusterBy").getOrElse("bucket"),
       opt("sortBy").getOrElse("key"),
       opt("partitions").getOrElse("0").toInt,
       opt("filePerKey").exists(_.toBoolean),
-      opt("format").getOrElse(ClusteredSinkFormat.Json),
       GraftCatalog.decodeAliases(tblProps))
   }
 }
@@ -229,7 +213,6 @@ object SinkWriteMode {
 final class ClusteredSinkWriteBuilder(
     schema: StructType, path: String, clusterBy: String, sortBy: String,
     partitions: Int, filePerKey: Boolean = false,
-    format: String = ClusteredSinkFormat.Json,
     aliases: Map[String, Seq[String]] = Map.empty) extends WriteBuilder
     with SupportsOverwrite with SupportsDynamicOverwrite {
   private var mode: SinkWriteMode = SinkWriteMode.Append
@@ -248,13 +231,12 @@ final class ClusteredSinkWriteBuilder(
   }
   override def build(): Write =
     new ClusteredSinkWrite(schema, path, clusterBy, sortBy, partitions, mode,
-      filePerKey, format, aliases)
+      filePerKey, aliases)
 }
 
 final class ClusteredSinkWrite(
     schema: StructType, path: String, clusterBy: String, sortBy: String,
     partitions: Int, mode: SinkWriteMode, filePerKey: Boolean = false,
-    format: String = ClusteredSinkFormat.Json,
     aliases: Map[String, Seq[String]] = Map.empty)
     extends Write with RequiresDistributionAndOrdering {
 
@@ -278,11 +260,10 @@ final class ClusteredSinkWrite(
 
   override def toBatch: BatchWrite =
     new ClusteredSinkBatchWrite(schema, path, idx(clusterBy), idx(sortBy),
-      clusterBy, sortBy, mode, filePerKey, format, aliases)
+      clusterBy, sortBy, mode, filePerKey, aliases)
 
   override def toStreaming: StreamingWrite =
-    new ClusteredSinkStreamingWrite(schema, path, idx(clusterBy), idx(sortBy),
-      format)
+    new ClusteredSinkStreamingWrite(schema, path, idx(clusterBy), idx(sortBy))
 }
 
 /** Structured Streaming write path: same files, same manifest, same
@@ -293,16 +274,13 @@ final class ClusteredSinkWrite(
   * instead of duplicating — the exactly-once contract a streaming sink
   * must provide OVER an at-least-once execution engine. */
 final class ClusteredSinkStreamingWrite(
-    schema: StructType, path: String, clusterIdx: Int, sortIdx: Int,
-    format: String = ClusteredSinkFormat.Json)
+    schema: StructType, path: String, clusterIdx: Int, sortIdx: Int)
     extends StreamingWrite {
-
-  private val ext: String = ClusteredSinkFormat.extension(format)
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory = {
     Files.createDirectories(Paths.get(path, "_tmp"))
     ClusteredSinkStreamingFactory(schema, Paths.get(path, "_tmp").toString,
-      clusterIdx, sortIdx, format)
+      clusterIdx, sortIdx)
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
@@ -310,7 +288,7 @@ final class ClusteredSinkStreamingWrite(
     Files.createDirectories(dataDir)
     val manifest = new StringBuilder
     messages.collect { case m: ClusteredSinkCommit if m.rows > 0 =>
-      val name = f"part-$epochId%05d-${m.partitionId}%05d.$ext%s"
+      val name = f"part-$epochId%05d-${m.partitionId}%05d" + ClusteredSink.Ext
       Files.move(Paths.get(m.tmpPath), dataDir.resolve(name),
         StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
       ClusteredSinkCommit.sweepSidecar(Paths.get(m.tmpPath))
@@ -331,24 +309,20 @@ final class ClusteredSinkStreamingWrite(
 /** Top-level (serializable) streaming factory — epoch id joins the temp
   * name so concurrent epoch attempts never collide. */
 final case class ClusteredSinkStreamingFactory(
-    schema: StructType, tmpDir: String, clusterIdx: Int, sortIdx: Int,
-    format: String = ClusteredSinkFormat.Json)
+    schema: StructType, tmpDir: String, clusterIdx: Int, sortIdx: Int)
     extends StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
     new ClusteredSinkDataWriter(schema, tmpDir, partitionId, s"$taskId-e$epochId",
-      clusterIdx, sortIdx, filePerKey = false, format = format)
+      clusterIdx, sortIdx, filePerKey = false)
 }
 
 final class ClusteredSinkBatchWrite(
     schema: StructType, path: String, clusterIdx: Int, sortIdx: Int,
     clusterBy: String, sortBy: String, mode: SinkWriteMode,
     filePerKey: Boolean = false,
-    format: String = ClusteredSinkFormat.Json,
     aliases: Map[String, Seq[String]] = Map.empty)
     extends BatchWrite {
-
-  private val ext: String = ClusteredSinkFormat.extension(format)
 
   // Per-JOB commit id: committed file names are namespaced by it, so a
   // second append to the same path can never collide with (and silently
@@ -363,7 +337,7 @@ final class ClusteredSinkBatchWrite(
     val tmp = Paths.get(path, "_tmp")
     Files.createDirectories(tmp)
     ClusteredSinkWriterFactory(schema, tmp.toString, clusterIdx, sortIdx,
-      filePerKey, format)
+      filePerKey)
   }
 
   /** Flatten commit messages: a filePerKey task reports one
@@ -394,7 +368,7 @@ final class ClusteredSinkBatchWrite(
         // filePerKey task contributes several entries under one
         // partition id and names must stay unique
         news.zipWithIndex.foreach { case (m, i) =>
-          val name = f"part-$jobId-$i%05d.$ext%s"
+          val name = f"part-$jobId-$i%05d" + ClusteredSink.Ext
           Files.move(Paths.get(m.tmpPath), dataDir.resolve(name),
             StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
           ClusteredSinkCommit.sweepSidecar(Paths.get(m.tmpPath))
@@ -453,12 +427,13 @@ final class ClusteredSinkBatchWrite(
     *      a crash before the move leaves data/ files the manifest does
     *      not reference (invisible to manifest readers).
     *
-    * Crash recovery for RAW-DIRECTORY readers (spark.read.json(dir +
-    * "/data") without the manifest): every overwrite commit begins with
-    * an ORPHAN SWEEP — any data/ file the committed manifest does not
-    * reference is garbage from a crashed prior commit (new files landed
-    * before the manifest move, or replaced originals whose
-    * delete-after-commit didn't finish) and is deleted before planning.
+    * Crash recovery for RAW-DIRECTORY readers (spark.read.schema(...)
+    * .parquet(dir + "/data") without the manifest): every overwrite
+    * commit begins with an ORPHAN SWEEP — any data/ file the committed
+    * manifest does not reference is garbage from a crashed prior commit
+    * (new files landed before the manifest move, or replaced originals
+    * whose delete-after-commit didn't finish) and is deleted before
+    * planning.
     * Rewrite temps are staged under _tmp/ (never inside data/), so a
     * crash mid-rewrite can never leave a half-written file where a raw
     * reader would see it. Net guarantee: manifest readers get atomic
@@ -466,7 +441,11 @@ final class ClusteredSinkBatchWrite(
     * after any COMPLETED commit, and a crashed overwrite is healed by
     * the next one. (The sweep treats _manifest.jsonl as the sole source
     * of truth — mixing streaming epoch manifests and batch overwrites on
-    * one path is unsupported.)
+    * one path is unsupported.) A raw-directory reader also reads each
+    * segment under its PHYSICAL column names: it does not see
+    * [[GraftCatalog]]'s metadata-only renames (a renamed column reads
+    * as null in pre-rename segments), drops, or ADD COLUMN defaults —
+    * read catalog tables through the catalog.
     */
   private def commitReplacing(
       dataDir: Path, manifestPath: Path,
@@ -491,7 +470,7 @@ final class ClusteredSinkBatchWrite(
           val f = it.next()
           val n = f.getFileName.toString
           if (!referenced(n) && n.startsWith("part-") &&
-              (n.endsWith(".json") || n.endsWith(".parquet")))
+              n.endsWith(ClusteredSink.Ext))
             orphans += f
         }
         orphans.result().foreach(Files.deleteIfExists(_))
@@ -505,18 +484,11 @@ final class ClusteredSinkBatchWrite(
         manifest.append(e.line)
       else {
         val oldFile = dataDir.resolve(e.file)
-        // copy-on-write dispatches on the committed file's own payload
-        // encoding — a table can legally mix (ALTER-era history)
-        val isParquet = e.file.endsWith(".parquet")
-        val (survivors, stats) =
-          if (isParquet) ClusteredSinkOverwrite.rewriteParquet(
-            oldFile, tmpDir, schema, clusterBy, sortBy, region, aliases)
-          else ClusteredSinkOverwrite.rewrite(
-            oldFile, tmpDir, schema, clusterBy, sortBy, region)
+        val (survivors, stats) = ClusteredSinkOverwrite.rewriteParquet(
+          oldFile, tmpDir, schema, clusterBy, sortBy, region, aliases)
         toDelete += oldFile
         if (survivors > 0) {
-          val name =
-            f"part-$jobId-rw-$rw%05d.${if (isParquet) "parquet" else "json"}%s"
+          val name = f"part-$jobId-rw-$rw%05d" + ClusteredSink.Ext
           rw += 1
           Files.move(Paths.get(stats.tmpPath), dataDir.resolve(name),
             StandardCopyOption.ATOMIC_MOVE)
@@ -525,7 +497,7 @@ final class ClusteredSinkBatchWrite(
       }
     }
     news.zipWithIndex.foreach { case (m, i) =>
-      val name = f"part-$jobId-$i%05d.$ext%s"
+      val name = f"part-$jobId-$i%05d" + ClusteredSink.Ext
       Files.move(Paths.get(m.tmpPath), dataDir.resolve(name),
         StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
       ClusteredSinkCommit.sweepSidecar(Paths.get(m.tmpPath))
@@ -548,21 +520,19 @@ final class ClusteredSinkBatchWrite(
   * read-side RangeDocAggReaderFactory). */
 final case class ClusteredSinkWriterFactory(
     schema: StructType, tmpDir: String, clusterIdx: Int, sortIdx: Int,
-    filePerKey: Boolean = false, format: String = ClusteredSinkFormat.Json)
+    filePerKey: Boolean = false)
     extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new ClusteredSinkDataWriter(schema, tmpDir, partitionId, taskId.toString,
-      clusterIdx, sortIdx, filePerKey, format)
+      clusterIdx, sortIdx, filePerKey)
 }
 
 final class ClusteredSinkDataWriter(
     schema: StructType, tmpDir: String, partitionId: Int, attempt: String,
-    clusterIdx: Int, sortIdx: Int, filePerKey: Boolean = false,
-    format: String = ClusteredSinkFormat.Json)
+    clusterIdx: Int, sortIdx: Int, filePerKey: Boolean = false)
     extends DataWriter[InternalRow] {
 
-  private val parquet = format == ClusteredSinkFormat.Parquet
   private var pq: ClusteredSinkFormat.ParquetSegment = _
 
   // filePerKey mode (the SPJ layout): input arrives sorted by
@@ -577,7 +547,6 @@ final class ClusteredSinkDataWriter(
     s"attempt-$partitionId-$attempt" + (if (filePerKey) s"-s$segIdx" else ""))
   private var tmpPath: Path = segPath
   private val segments = scala.collection.mutable.ArrayBuffer[ClusteredSinkCommit]()
-  private var out: java.io.BufferedWriter = _
   private var rows = 0L
   private var minCluster = Long.MaxValue
   private var maxCluster = Long.MinValue
@@ -621,43 +590,16 @@ final class ClusteredSinkDataWriter(
       (distinctKeys.nonEmpty && distinctKeys.last != longAt(row, clusterIdx))
   }
 
-  private def isOpen: Boolean = out != null || pq != null
+  private def isOpen: Boolean = pq != null
 
-  private def closeCurrent(): Unit = {
-    if (out != null) { out.close(); out = null }
+  private def closeCurrent(): Unit =
     if (pq != null) { pq.close(); pq = null }
-  }
 
   override def write(row: InternalRow): Unit = {
     if (filePerKey && isOpen && rows > 0 && keyChanged(row)) rollSegment()
-    if (!isOpen) { // lazy open: empty partitions produce no file
-      if (parquet) pq = new ClusteredSinkFormat.ParquetSegment(
-        tmpPath.toString, schema)
-      else out = Files.newBufferedWriter(tmpPath, StandardCharsets.UTF_8)
-    }
-    if (parquet) pq.write(row)
-    else {
-      val b = new StringBuilder(64)
-      b.append('{')
-      var i = 0
-      while (i < schema.length) {
-        if (i > 0) b.append(',')
-        b.append('"').append(schema.fields(i).name).append("\":")
-        if (row.isNullAt(i)) b.append("null")
-        else schema.fields(i).dataType match {
-          case LongType    => b.append(row.getLong(i))
-          case IntegerType => b.append(row.getInt(i))
-          case DoubleType  => b.append(row.getDouble(i))
-          case BooleanType => b.append(row.getBoolean(i))
-          case StringType  =>
-            b.append('"').append(ClusteredSink.escape(row.getUTF8String(i).toString)).append('"')
-          case dt => sys.error(s"graft-sink: unsupported column type $dt")
-        }
-        i += 1
-      }
-      b.append('}').append('\n')
-      out.write(b.toString)
-    }
+    if (!isOpen) // lazy open: empty partitions produce no file
+      pq = new ClusteredSinkFormat.ParquetSegment(tmpPath.toString, schema)
+    pq.write(row)
     rows += 1
     // null keys contribute NO bound: an InternalRow getter on a null slot
     // returns an arbitrary value (0), which would falsely tighten the
@@ -896,57 +838,12 @@ object ClusteredSinkOverwrite {
         }.toSeq
     }
 
-  /** Copy-on-write: stream the file's JSON lines, keep rows OUTSIDE the
-    * region (lines pass through byte-identical), recompute stats for the
-    * survivor file. The temp is staged under `tmpDir` (i.e. `_tmp/`),
-    * NEVER inside `data/` — a crash mid-rewrite must not leave a
-    * half-written file visible to raw-directory readers. Returns
-    * (survivorCount, stats-with-tmpPath). */
-  def rewrite(oldFile: Path, tmpDir: Path, schema: StructType,
-      clusterBy: String, sortBy: String, region: Region): (Long, ClusteredSinkCommit) = {
-    val m = mapper
-    val tmp = tmpDir.resolve(oldFile.getFileName.toString + ".rw")
-    val out = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)
-    var rows = 0L
-    var minC = Long.MaxValue; var maxC = Long.MinValue
-    var minS = Long.MaxValue; var maxS = Long.MinValue
-    val in = Files.newBufferedReader(oldFile, StandardCharsets.UTF_8)
-    try {
-      var ln = in.readLine()
-      while (ln != null) {
-        if (ln.nonEmpty) {
-          val node = m.readTree(ln)
-          val kNode = node.get(clusterBy)
-          val dropped =
-            if (kNode == null || kNode.isNull) region.matchesNull
-            else region.matches(kNode.asLong)
-          if (!dropped) {
-            out.write(ln); out.write('\n')
-            rows += 1
-            if (kNode != null && !kNode.isNull) {
-              val c = kNode.asLong
-              if (c < minC) minC = c
-              if (c > maxC) maxC = c
-            }
-            val sNode = node.get(sortBy)
-            if (sNode != null && !sNode.isNull) {
-              val s = sNode.asLong
-              if (s < minS) minS = s
-              if (s > maxS) maxS = s
-            }
-          }
-        }
-        ln = in.readLine()
-      }
-    } finally { in.close(); out.close() }
-    (rows, ClusteredSinkCommit(0, tmp.toString, rows, minC, maxC, minS, maxS))
-  }
-
-  /** Copy-on-write for PARQUET segments (r15 — closes the format
-    * matrix): decode the full rows through the sink's own reader, keep
-    * rows outside the region, re-encode survivors through the segment
-    * writer, recompute stats. Same staging discipline as the json
-    * rewrite: the temp lives under `_tmp/`, never `data/`. */
+  /** Copy-on-write of one segment: decode the full rows through the
+    * sink's own reader, keep rows OUTSIDE the region, re-encode
+    * survivors through the segment writer, recompute stats. The temp is
+    * staged under `tmpDir` (i.e. `_tmp/`), NEVER inside `data/` — a
+    * crash mid-rewrite must not leave a half-written file visible to
+    * raw-directory readers. Returns (survivorCount, stats-with-tmpPath). */
   def rewriteParquet(oldFile: Path, tmpDir: Path, schema: StructType,
       clusterBy: String, sortBy: String, region: Region,
       aliases: Map[String, Seq[String]] = Map.empty)

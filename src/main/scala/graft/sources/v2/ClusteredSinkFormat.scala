@@ -15,36 +15,32 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** COLUMNAR payload for [[ClusteredSink]] tables (`format=parquet`,
-  * r14 — NOTES candidate 3): the sink's engine-grade surface (required
-  * distribution, two-phase commit, manifest statistics, filePerKey /
-  * key-grouped reads) was deliberately paired with a trivial JSON row
-  * encoding; the measured cost of that choice on a scan-heavy graph
-  * loop was 1.26× (EdgeBackendAb, org-20×). This module swaps the
-  * per-file encoding for parquet through the parquet-hadoop Example
-  * API — snappy-compressed, columnar, with read-side column projection
-  * pushed into the decoder — while every byte of the commit protocol,
-  * manifest planning, and SPJ machinery stays identical (the read side
-  * dispatches on the committed file's extension, so the scan/commit
-  * code is format-agnostic).
+/** The payload of every [[ClusteredSink]] table: one parquet segment
+  * per committed file, written through the parquet-hadoop Example API
+  * (snappy-compressed, columnar) and read with the projection pushed
+  * into the decoder. The commit protocol, manifest planning and SPJ
+  * machinery never look inside a segment; this module is the only
+  * code that does. Parquet covers every write mode: append, truncate,
+  * overwrite-by-filter and dynamic copy-on-write
+  * ([[ClusteredSinkOverwrite.rewriteParquet]]), streaming epochs, and
+  * the metadata-only column evolution of [[GraftCatalog]].
+  *
+  * Tables left by the deleted JSON-lines payload are refused at load
+  * ([[GraftCatalog]]) and at scan planning ([[ClusteredSinkScan]]); the
+  * fix is to drop and rebuild them.
   *
   * Types mirror the sink's contract: LONG/INT/DOUBLE/BOOLEAN/STRING,
-  * all optional (null = field absent in the row's record). Scope:
-  * batch append/truncate + reads; the copy-on-write overwrite modes
-  * and the streaming epoch writer keep the JSON payload (loud
-  * `require` at the write builder — not silently wrong, just not
-  * implemented for the columnar path).
+  * all optional (null = field absent in the row's record).
   */
 object ClusteredSinkFormat {
-  val Json = "json"
   val Parquet = "parquet"
 
-  def extension(format: String): String = format match {
-    case Json => "json"
-    case Parquet => "parquet"
-    case other => sys.error(s"graft-sink: unsupported format '$other' " +
-      "(json | parquet)")
-  }
+  /** A `format` table property or write option may only name the one
+    * payload. The check stays because the value comes from DDL and
+    * write options outside the program. */
+  def requireParquet(format: Option[String]): Unit =
+    format.foreach(f => require(f == Parquet,
+      s"graft-sink: unsupported format '$f'; parquet is the only payload"))
 
   def messageType(schema: StructType, name: String = "graft_sink")
       : MessageType = {
@@ -77,6 +73,21 @@ object ClusteredSinkFormat {
     conf.setBoolean("fs.file.impl.disable.cache", true)
     conf
   }
+
+  /** A committed segment as parquet-mr input, read with the sink's own
+    * conf. parquet-mr's one-argument `ParquetFileReader.open` and
+    * `ParquetReader.builder(support, path)` derive their options from a
+    * fresh default Configuration, which parses Hadoop's XML resources
+    * once per file — measured as nearly all of a segment reader's
+    * construction time. */
+  private def inputFile(file: String, conf: Configuration) =
+    org.apache.parquet.hadoop.util.HadoopInputFile
+      .fromPath(new HPath(file), conf)
+
+  private def openSegment(file: String, conf: Configuration)
+      : org.apache.parquet.hadoop.ParquetFileReader =
+    org.apache.parquet.hadoop.ParquetFileReader.open(inputFile(file, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
 
   /** Segment writer over the Example Group API. */
   final class ParquetSegment(path: String, schema: StructType) {
@@ -116,7 +127,8 @@ object ClusteredSinkFormat {
     * name for every row (`getType.getFieldIndex` — a string hash probe
     * per VALUE) and materialized a SimpleGroup per record; at the
     * org-100× graph soak that row tax made the loop 1.9× native
-    * bucketBy (EdgeBackendAb) — this materializer is what closes it. */
+    * bucketBy (components-loop A/B, SCALE.md) — this materializer is
+    * what closes it. */
   private final class RowMaterializer(requested: MessageType,
       required: StructType, outIndexOf: Map[String, Int])
       extends org.apache.parquet.io.api.RecordMaterializer[InternalRow] {
@@ -279,13 +291,11 @@ object ClusteredSinkFormat {
     // columns with the file's own schema: after ALTER TABLE ADD COLUMN,
     // segments written before the alter lack the new field and
     // parquet-mr rejects a requested field absent from the file
-    // (r14 ADVICE) — missing fields surface as null instead, matching
-    // the json payload's absent-key semantics (the materializer's
-    // record-start null fill covers them).
+    // (r14 ADVICE) — missing fields surface as null, or as their ADD
+    // COLUMN default (the materializer's record-start fill covers
+    // them).
     private val fileFields: Set[String] = {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new HPath(file), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val r = openSegment(file, conf)
       try {
         import scala.jdk.CollectionConverters._
         r.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
@@ -304,10 +314,12 @@ object ClusteredSinkFormat {
     private val outIndexOf: Map[String, Int] =
       resolved.map { case (i, fn) => fn -> i }.toMap
     private val reader: ParquetReader[InternalRow] =
-      ParquetReader.builder(
-          new InternalRowReadSupport(required, present, outIndexOf),
-          new HPath(file))
-        .withConf(conf).build()
+      new ParquetReader.Builder[InternalRow](inputFile(file, conf),
+          new org.apache.parquet.conf.HadoopParquetConfiguration(conf)) {
+        override protected def getReadSupport()
+            : org.apache.parquet.hadoop.api.ReadSupport[InternalRow] =
+          new InternalRowReadSupport(required, present, outIndexOf)
+      }.build()
     private var row: InternalRow = _
 
     override def next(): Boolean = {
@@ -319,21 +331,13 @@ object ClusteredSinkFormat {
     override def close(): Unit = reader.close()
   }
 
-  /** The Spark types the vectorized path handles (== the sink's full
-    * type contract, so in practice every parquet segment qualifies). */
-  private[v2] def vectorizable(dt: DataType): Boolean = dt match {
-    case LongType | IntegerType | DoubleType | BooleanType | StringType => true
-    case _ => false
-  }
-
   /** VECTORIZED reader over a committed parquet segment (r15 verdict
     * task 5, closing the sink reader's last gap vs native bucketBy):
     * column chunks decode straight into reused [[OnHeapColumnVector]]s
     * through parquet-mr's column accessors — one monomorphic tight loop
     * per column per batch, no per-record assembly, no virtual calls per
-    * value, no row allocation. The row-based [[ParquetRows]] path
-    * remains for mixed-payload tables (a scan must be uniformly
-    * columnar or uniformly row-based).
+    * value, no row allocation. Every table scan reads through it; the
+    * row-based [[ParquetRows]] serves the copy-on-write rewrite.
     *
     * Projection is pushed as before (only requested chunks are read or
     * decompressed); columns requested but absent from the file (ALTER
@@ -348,16 +352,13 @@ object ClusteredSinkFormat {
     import org.apache.parquet.column.{ColumnDescriptor, ColumnReader}
     import org.apache.parquet.column.impl.ColumnReadStoreImpl
     import org.apache.parquet.column.page.PageReadStore
-    import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter}
     import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
     import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
     import scala.jdk.CollectionConverters._
 
     private val conf = rawFsConf()
-    private val reader = ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new HPath(file), conf))
+    private val reader = openSegment(file, conf)
     private val fileSchema = reader.getFileMetaData.getSchema
     private val createdBy = reader.getFileMetaData.getCreatedBy
 

@@ -1,14 +1,12 @@
 package graft.sources.v2
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Manifest-driven READ path for [[ClusteredSink]] tables — the half that
   * turns sink + catalog into a complete (if deliberately small) TABLE
@@ -30,10 +28,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *     crashed commit left behind are invisible, which is the atomic-
   *     visibility guarantee raw-directory readers don't get.
   *
-  * Column pruning is honored at parse time (only requested fields are
-  * materialized). Supported types mirror the writer: LONG/INT/DOUBLE/
-  * BOOLEAN/STRING, null for JSON null or missing key (missing = column
-  * added by ALTER TABLE after the file was written).
+  * Every segment is parquet, so every scan is COLUMNAR
+  * ([[ClusteredSinkFormat.ParquetBatches]]); column pruning reaches the
+  * decoder. Supported types mirror the writer: LONG/INT/DOUBLE/BOOLEAN/
+  * STRING; a column added by ALTER TABLE after a segment was written
+  * reads as its default, or null. A read schema outside those types, or
+  * a manifest naming a non-parquet segment (a table from the deleted
+  * JSON-lines payload), fails at planning.
   */
 final class ClusteredSinkScanBuilder(
     path: String, schema: StructType, clusterBy: String,
@@ -71,12 +72,23 @@ final class ClusteredSinkScan(
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
   import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 
+  required.fields.foreach { f =>
+    f.dataType match {
+      case LongType | IntegerType | DoubleType | BooleanType | StringType =>
+      case dt => sys.error(s"graft-sink read: unsupported type $dt")
+    }
+  }
+
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
   // planned once, cached: description() and planInputPartitions() agree
   private lazy val (kept, total): (Seq[ClusteredSinkOverwrite.ManifestEntry], Int) = {
     val all = ClusteredSinkOverwrite.readManifest(Paths.get(path, "_manifest.jsonl"))
+    all.find(!_.file.endsWith(ClusteredSink.Ext)).foreach { e =>
+      sys.error(s"graft-sink: $path holds segment ${e.file}, written with " +
+        "the deleted JSON-lines payload; drop the table and rebuild it")
+    }
     val region =
       if (prunable.isEmpty) null
       else ClusteredSinkOverwrite.compile(prunable, clusterBy)
@@ -123,14 +135,7 @@ final class ClusteredSinkScan(
       clusterByIsInt)).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    // columnar only when EVERY kept file is a parquet segment with
-    // vectorizable types: a DSv2 scan must be uniformly columnar or
-    // uniformly row-based, so mixed-payload tables keep the row path
-    ClusteredSinkReaderFactory(tableSchema, required, aliases,
-      columnar = kept.nonEmpty &&
-        kept.forall(_.file.endsWith(".parquet")) &&
-        required.fields.forall(f =>
-          ClusteredSinkFormat.vectorizable(f.dataType)))
+    ClusteredSinkReaderFactory(required, aliases)
 }
 
 /** `keyValue` is non-null only when the scan reported key-grouped
@@ -151,67 +156,17 @@ final case class ClusteredSinkFilePartition(
 
 /** Top-level (serializable) — an anonymous factory would capture the Scan. */
 final case class ClusteredSinkReaderFactory(
-    tableSchema: StructType, required: StructType,
-    aliases: Map[String, Seq[String]] = Map.empty,
-    columnar: Boolean = false) extends PartitionReaderFactory {
+    required: StructType,
+    aliases: Map[String, Seq[String]] = Map.empty) extends PartitionReaderFactory {
 
-  override def supportColumnarReads(p: InputPartition): Boolean = columnar
+  override def supportColumnarReads(p: InputPartition): Boolean = true
 
   override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    require(columnar, "columnar read requested on a row-based scan")
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new ClusteredSinkFormat.ParquetBatches(
       p.asInstanceOf[ClusteredSinkFilePartition].file, required,
       aliases = aliases)
-  }
 
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val file = p.asInstanceOf[ClusteredSinkFilePartition].file
-    // payload dispatch on the COMMITTED file's extension: the manifest,
-    // planning, and SPJ machinery are format-agnostic, so a parquet
-    // segment (format=parquet tables) and a json segment read through
-    // the same scan
-    if (file.endsWith(".parquet"))
-      return new ClusteredSinkFormat.ParquetRows(file, required, aliases)
-    new PartitionReader[InternalRow] {
-      private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      private val in = Files.newBufferedReader(Paths.get(file), StandardCharsets.UTF_8)
-      private var row: InternalRow = _
-
-      override def next(): Boolean = {
-        var ln = in.readLine()
-        while (ln != null && ln.isEmpty) ln = in.readLine()
-        if (ln == null) { row = null; false }
-        else {
-          val node = mapper.readTree(ln)
-          val vals = new Array[Any](required.length)
-          var i = 0
-          while (i < required.length) {
-            val f = required.fields(i)
-            // metadata-only renames: fall back to the column's
-            // historical names (newest first) in pre-rename files
-            var v = node.get(f.name)
-            if (v == null) aliases.getOrElse(f.name, Seq.empty).reverseIterator
-              .takeWhile(_ => v == null).foreach(old => v = node.get(old))
-            vals(i) =
-              if (v == null || v.isNull) null
-              else f.dataType match {
-                case LongType    => v.asLong
-                case IntegerType => v.asInt
-                case DoubleType  => v.asDouble
-                case BooleanType => v.asBoolean
-                case StringType  => UTF8String.fromString(v.asText)
-                case dt => sys.error(s"graft-sink read: unsupported type $dt")
-              }
-            i += 1
-          }
-          row = new GenericInternalRow(vals)
-          true
-        }
-      }
-
-      override def get(): InternalRow = row
-      override def close(): Unit = in.close()
-    }
-  }
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("graft-sink scans are columnar")
 }

@@ -30,12 +30,16 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   spark.sql.catalog.<name>.warehouse = /some/dir
   *
   * Layout: `<warehouse>/<ns...>/<table>/` holding `_table.json` (schema
-  * JSON + clusterBy/sortBy) beside the sink's own `data/` +
-  * `_manifest.jsonl`. Metadata operations are directory operations; the
-  * DATA commit protocol stays entirely in [[ClusteredSinkBatchWrite]] —
-  * the catalog resolves identifiers to tables and never touches data
-  * files, which is the Iceberg/Delta separation of catalog vs table
-  * format.
+  * JSON + clusterBy/sortBy + `"format":"parquet"`) beside the sink's own
+  * `data/` + `_manifest.jsonl`. A `_table.json` without that format
+  * entry, or with another one, is a table from the deleted JSON-lines
+  * payload: loading it fails loudly, and the fix is to drop and rebuild
+  * it ([[graft.engine.Warehouse.adopt]] treats it as absent, so the
+  * engine's own builders do exactly that). Metadata operations are
+  * directory operations; the DATA commit protocol stays entirely in
+  * [[ClusteredSinkBatchWrite]] — the catalog resolves identifiers to
+  * tables and never touches data files, which is the Iceberg/Delta
+  * separation of catalog vs table format.
   */
 final class GraftCatalog extends TableCatalog with SupportsNamespaces {
   private var catName: String = _
@@ -83,10 +87,21 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
   override def tableExists(ident: Identifier): Boolean =
     Files.exists(metaFile(ident))
 
-  override def loadTable(ident: Identifier): Table = {
+  /** The table's `_table.json`, refused unless its payload is parquet. */
+  private def readMeta(ident: Identifier): com.fasterxml.jackson.databind.JsonNode = {
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
     val n = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(Files.readString(metaFile(ident)))
+    val format = Option(n.get("format")).map(_.asText)
+    if (!format.contains(ClusteredSinkFormat.Parquet))
+      throw new IllegalStateException(s"graft catalog: table $ident has " +
+        s"payload format ${format.getOrElse("absent (JSON lines)")}, not " +
+        "parquet, the only payload; drop the table and rebuild it")
+    n
+  }
+
+  override def loadTable(ident: Identifier): Table = {
+    val n = readMeta(ident)
     val schema = DataType.fromJson(n.get("schema").asText).asInstanceOf[StructType]
     val props = new util.HashMap[String, String]()
     props.put("path", tblDir(ident).toString)
@@ -96,9 +111,6 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
     // writer of the table honors it — absent in pre-existing metadata
     if (n.has("filePerKey") && n.get("filePerKey").asBoolean)
       props.put("filePerKey", "true")
-    // payload format (r14): persisted so every writer/reader of the
-    // table uses one encoding; absent in pre-existing metadata = json
-    if (n.has("format")) props.put("format", n.get("format").asText)
     // durable graft.* user properties (r15) — absent in older metadata
     readCustom(n).foreach { case (k, v) => props.put(k, v) }
     new ClusteredSinkTable(schema, props, ident.toString)
@@ -113,57 +125,54 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
     require(partitions.length == idParts.length && idParts.length <= 1,
       "graft catalog tables support at most one identity PARTITIONED BY " +
         "column (it becomes the sink's clusterBy)")
-    def opt(k: String, dflt: String): String =
+    def prop(k: String): Option[String] =
       Option(properties.get(TableCatalog.OPTION_PREFIX + k))
-        .orElse(Option(properties.get(k))).getOrElse(dflt)
+        .orElse(Option(properties.get(k)))
+    def opt(k: String, dflt: String): String = prop(k).getOrElse(dflt)
     val clusterBy = idParts.headOption.getOrElse(opt("clusterBy", "bucket"))
     val sortBy = opt("sortBy", "key")
     val filePerKey = opt("filePerKey", "false").toBoolean
-    val format = opt("format", ClusteredSinkFormat.Json)
-    ClusteredSinkFormat.extension(format) // validate loudly
+    ClusteredSinkFormat.requireParquet(prop("format"))
     require(schema.fieldNames.contains(clusterBy) &&
       schema.fieldNames.contains(sortBy),
       s"clusterBy/sortBy ($clusterBy/$sortBy) must be table columns")
     Files.createDirectories(tblDir(ident))
-    writeMeta(ident, schema, clusterBy, sortBy, filePerKey, format,
+    writeMeta(ident, schema, clusterBy, sortBy, filePerKey,
       customProps(properties))
     loadTable(ident)
   }
 
-  /** Schema evolution by `_table.json` rewrite. JSON-lines files encode
-    * columns BY NAME (no Iceberg field ids), which dictates what each
-    * change costs:
+  /** Schema evolution by `_table.json` rewrite; no change touches a data
+    * file. Parquet segments name their columns (no Iceberg field ids),
+    * which dictates how each change is recorded:
     *
-    *   - ADD COLUMN (nullable): metadata-only — a reader with the new
-    *     schema resolves the missing key to null in every old file,
-    *     which is exactly the add-column semantics.
-    *   - DROP COLUMN: metadata-only — the stale key in old files is
-    *     ignored by schema-driven readers. clusterBy/sortBy columns
-    *     cannot be dropped (the layout is keyed on them).
-    *   - RENAME COLUMN: metadata rewrite PLUS a copy-on-write rewrite of
-    *     every data file's JSON keys (by-name encoding makes rename a
-    *     data operation; Iceberg dodges this with field ids). Temps are
-    *     staged under `_tmp/` and atomically moved back, so a crash
-    *     leaves each file either fully-old or fully-new — and since the
-    *     schema commit (the `_table.json` write) happens only after all
-    *     files moved, a crash mid-rename leaves the table readable under
-    *     the OLD schema. Driver-side here; on a cluster this is a
-    *     distributed rewrite job with the same stage-then-move protocol.
+    *   - ADD COLUMN (nullable): the new schema's column is absent from
+    *     every old segment and reads as null there. `ADD COLUMN ...
+    *     DEFAULT v` stores the literal in the field metadata, and old
+    *     segments read it instead of null; segments written after the
+    *     alter carry explicit values, nulls included.
+    *   - DROP COLUMN: the stale column in old segments is no longer
+    *     requested. Its physical names become tombstones (`graft.dropped`)
+    *     so a later ADD or RENAME cannot resurrect the old bytes.
+    *     clusterBy/sortBy columns cannot be dropped (the layout is keyed
+    *     on them).
+    *   - RENAME COLUMN: the alias log (`graft.aliases`) records each
+    *     column's historical names, and readers resolve a requested
+    *     column per segment through it. Copy-on-write rewrites re-encode
+    *     under the current names. A name that is another column's
+    *     history, or a tombstone, is refused.
     *
-    * Anything else (type changes, nested fields, nullability) fails
-    * loudly — silently accepting a change the storage cannot honor is
-    * how tables corrupt.
+    * Raw-directory readers see the physical names only (see
+    * [[ClusteredSinkBatchWrite]]'s crash-recovery note). Anything else
+    * (type changes, nested fields, nullability) fails loudly — silently
+    * accepting a change the storage cannot honor is how tables corrupt.
     */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
-    if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    val n = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Files.readString(metaFile(ident)))
+    val n = readMeta(ident)
     var schema = DataType.fromJson(n.get("schema").asText).asInstanceOf[StructType]
     var clusterBy = n.get("clusterBy").asText
     var sortBy = n.get("sortBy").asText
     val filePerKey = n.has("filePerKey") && n.get("filePerKey").asBoolean
-    val fmt = if (n.has("format")) n.get("format").asText
-      else ClusteredSinkFormat.Json
     var custom = readCustom(n)
     val renames = Seq.newBuilder[(String, String)]
     changes.foreach {
@@ -202,15 +211,10 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
         // metadata under Spark's own EXISTS_DEFAULT/CURRENT_DEFAULT
         // keys; segments written before the alter (which lack the
         // column entirely) read the default, segments written after
-        // carry explicit values. Parquet payloads only: the json
-        // reader's absent-key semantics cannot distinguish a pre-alter
-        // row from an explicit null.
+        // carry explicit values.
         val meta = Option(a.defaultValue()) match {
           case None => Metadata.empty
           case Some(dv) =>
-            require(fmt == ClusteredSinkFormat.Parquet,
-              "ALTER TABLE ADD COLUMN DEFAULT: only parquet-payload " +
-                "tables support metadata-only defaults")
             val lit = org.apache.spark.sql.catalyst.expressions.Literal(
               dv.getValue.value, dv.getValue.dataType)
             new MetadataBuilder()
@@ -262,96 +266,52 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
     }
     val rs = renames.result()
     if (rs.nonEmpty) {
-      if (fmt == ClusteredSinkFormat.Json) {
-        // json tables keep the copy-on-write key rewrite (by-name row
-        // encoding makes rename a data operation there)
-        rewriteDataKeys(ident, rs.toMap)
-      } else {
-        // parquet tables (r16): rename is METADATA-ONLY — the alias log
-        // records each column's historical names and readers resolve a
-        // required column against old files through it (the poor
-        // engine's Iceberg field ids). Data files are never touched.
-        var aliases = GraftCatalog.decodeAliases(custom)
-        rs.foreach { case (from, to) =>
-          require(!from.exists(";|=".contains(_)) &&
-            !to.exists(";|=".contains(_)),
-            "ALTER TABLE RENAME: ';', '|', '=' not allowed in column names")
-          // `to` must not be ANOTHER column's historical name: readers
-          // try a column's current name first, so in pre-rename
-          // segments the renamed column would silently resolve to the
-          // old physical column's data (r16 advice — same resurrect
-          // class the AddColumn guard blocks). Renaming a column BACK
-          // to a name in its own history is safe: that physical column
-          // is the same logical column.
-          require(!aliases.exists { case (cur, hist) =>
-              cur != from && hist.contains(to) },
-            s"ALTER TABLE RENAME: $to is another column's historical " +
-              "name; reusing it would resolve old segments' data under " +
-              "the renamed column")
-          // `to` must not be a DROPPED column's tombstoned physical
-          // name either (r17 advice): DROP removes the name from the
-          // alias map, so the guard above alone would let a rename
-          // adopt it — and readers resolve the current name first, so
-          // pre-drop segments would serve the dropped column's stale
-          // bytes under the renamed column. Same resurrect class the
-          // AddColumn tombstone guard blocks.
-          require(!GraftCatalog.decodeDropped(custom).contains(to),
-            s"ALTER TABLE RENAME: $to is a dropped column's physical " +
-              "name; reusing it would resurrect the dropped data under " +
-              "the renamed column")
-          aliases += to -> (aliases.getOrElse(from, Seq.empty) :+ from)
-          aliases -= from
-        }
-        custom = (custom - GraftCatalog.AliasProp) ++
-          (if (aliases.isEmpty) Map.empty
-           else Map(GraftCatalog.AliasProp -> GraftCatalog.encodeAliases(aliases)))
+      // rename is METADATA-ONLY (r16): the alias log records each
+      // column's historical names and readers resolve a required column
+      // against old files through it (the poor engine's Iceberg field
+      // ids). Data files are never touched.
+      var aliases = GraftCatalog.decodeAliases(custom)
+      rs.foreach { case (from, to) =>
+        require(!from.exists(";|=".contains(_)) &&
+          !to.exists(";|=".contains(_)),
+          "ALTER TABLE RENAME: ';', '|', '=' not allowed in column names")
+        // `to` must not be ANOTHER column's historical name: readers
+        // try a column's current name first, so in pre-rename
+        // segments the renamed column would silently resolve to the
+        // old physical column's data (r16 advice — same resurrect
+        // class the AddColumn guard blocks). Renaming a column BACK
+        // to a name in its own history is safe: that physical column
+        // is the same logical column.
+        require(!aliases.exists { case (cur, hist) =>
+            cur != from && hist.contains(to) },
+          s"ALTER TABLE RENAME: $to is another column's historical " +
+            "name; reusing it would resolve old segments' data under " +
+            "the renamed column")
+        // `to` must not be a DROPPED column's tombstoned physical
+        // name either (r17 advice): DROP removes the name from the
+        // alias map, so the guard above alone would let a rename
+        // adopt it — and readers resolve the current name first, so
+        // pre-drop segments would serve the dropped column's stale
+        // bytes under the renamed column. Same resurrect class the
+        // AddColumn tombstone guard blocks.
+        require(!GraftCatalog.decodeDropped(custom).contains(to),
+          s"ALTER TABLE RENAME: $to is a dropped column's physical " +
+            "name; reusing it would resurrect the dropped data under " +
+            "the renamed column")
+        aliases += to -> (aliases.getOrElse(from, Seq.empty) :+ from)
+        aliases -= from
       }
+      custom = (custom - GraftCatalog.AliasProp) ++
+        (if (aliases.isEmpty) Map.empty
+         else Map(GraftCatalog.AliasProp -> GraftCatalog.encodeAliases(aliases)))
     }
-    writeMeta(ident, schema, clusterBy, sortBy, filePerKey, fmt, custom)
+    writeMeta(ident, schema, clusterBy, sortBy, filePerKey, custom)
     loadTable(ident)
-  }
-
-  /** Copy-on-write JSON-key rename over every data file (see alterTable
-    * scaladoc for the crash story). Lines are parsed and re-emitted with
-    * Jackson — a textual replace could corrupt string VALUES that happen
-    * to contain a key name. */
-  private def rewriteDataKeys(ident: Identifier, renames: Map[String, String]): Unit = {
-    val dataDir = tblDir(ident).resolve("data")
-    if (!Files.isDirectory(dataDir)) return
-    val tmpDir = tblDir(ident).resolve("_tmp")
-    Files.createDirectories(tmpDir)
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    listDir(dataDir).foreach { f =>
-      val tmp = tmpDir.resolve(f.getFileName.toString + ".alter")
-      val out = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)
-      val in = Files.newBufferedReader(f, StandardCharsets.UTF_8)
-      try {
-        var ln = in.readLine()
-        while (ln != null) {
-          if (ln.nonEmpty) {
-            val node = m.readTree(ln)
-              .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-            val renamed = m.createObjectNode()
-            val names = node.fieldNames()
-            while (names.hasNext) {
-              val k = names.next()
-              renamed.set[com.fasterxml.jackson.databind.JsonNode](
-                renames.getOrElse(k, k), node.get(k))
-            }
-            out.write(m.writeValueAsString(renamed)); out.write('\n')
-          }
-          ln = in.readLine()
-        }
-      } finally { in.close(); out.close() }
-      Files.move(tmp, f, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
   }
 
   private def writeMeta(
       ident: Identifier, schema: StructType, clusterBy: String,
       sortBy: String, filePerKey: Boolean = false,
-      format: String = ClusteredSinkFormat.Json,
       custom: Map[String, String] = Map.empty): Unit = {
     val m = new com.fasterxml.jackson.databind.ObjectMapper()
     val propsNode = m.createObjectNode()
@@ -359,7 +319,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
     val meta =
       s"""{"schema":${com.fasterxml.jackson.databind.node.TextNode.valueOf(schema.json)},""" +
         s""""clusterBy":"$clusterBy","sortBy":"$sortBy",""" +
-        s""""format":"$format",""" +
+        s""""format":"${ClusteredSinkFormat.Parquet}",""" +
         s""""filePerKey":$filePerKey,""" +
         s""""props":${m.writeValueAsString(propsNode)}}"""
     Files.write(metaFile(ident), meta.getBytes(StandardCharsets.UTF_8))

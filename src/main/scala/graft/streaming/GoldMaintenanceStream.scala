@@ -394,7 +394,6 @@ object VersionedStateStore {
       .option("path", dir)
       .option("clusterBy", "__bucket").option("sortBy", "__bucket")
       .option("filePerKey", "true")
-      .option("format", graft.sources.v2.ClusteredSinkFormat.Parquet)
       .option("partitions",
         math.min(cs.buckets, spark.sessionState.conf.numShufflePartitions)
           .toString)

@@ -105,4 +105,32 @@ class WarehouseSpec extends SparkSpec {
     assert(props.contains(Warehouse.CompleteProp),
       "rebuild must restore the completeness marker")
   }
+
+  test("a JSON-era edge table in a durable warehouse is refused, not " +
+      "adopted, and rebuilt as parquet") {
+    val t1 = GraphOps.graftEdgeTable(spark, sf)
+    val n = t1.count()
+    val iso = GraphOps.graftEdgeSession(spark)
+    val dir = graft.sources.LegacyJsonTable.dirOf(t1)
+    val ident = s"${GraphOps.GraftEdgeCat}.g.${dir.getFileName}"
+    // what the JSON-lines payload left under the same content address:
+    // complete by its own marker, but no parquet format entry
+    graft.sources.LegacyJsonTable.plant(dir,
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "src BIGINT, dst BIGINT, bucket BIGINT"),
+      "bucket", "src", Seq("""{"src":1,"dst":2,"bucket":1}"""),
+      filePerKey = true, props = Map(Warehouse.CompleteProp -> "true"))
+    val e = intercept[Exception](iso.table(ident).collect())
+    assert(e.getMessage.contains(dir.getFileName.toString) &&
+      e.getMessage.contains("drop the table and rebuild it"), e.getMessage)
+    assert(Warehouse.adopt(iso, ident, Seq(Warehouse.CompleteProp)).isEmpty)
+    GraphOps.resetEdgeMemoryForTest() // what a restart leaves behind
+    val t2 = GraphOps.graftEdgeTable(spark, sf)
+    assert(t2.count() === n, "the legacy table must be rebuilt in full")
+    val segs = dir.resolve("data").toFile.listFiles().map(_.getName)
+    assert(segs.nonEmpty && segs.forall(_.endsWith(".parquet")),
+      segs.mkString(", "))
+    // the rebuilt table is what the next process adopts
+    assert(Warehouse.adopt(iso, ident, Seq(Warehouse.CompleteProp)).isDefined)
+  }
 }

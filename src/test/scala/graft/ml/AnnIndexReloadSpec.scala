@@ -97,4 +97,30 @@ class AnnIndexReloadSpec extends SparkSpec {
     assert(index2.count() === n, "partial table must be rebuilt")
     assert(cb2.nonEmpty)
   }
+
+  test("a JSON-era index table in the warehouse is refused and rebuilt") {
+    val (index1, cb1) = SimilarityOps.annIndex(spark, sf)
+    val n = index1.count()
+    val iso = SimilarityOps.annSession(spark)
+    val dir = graft.sources.LegacyJsonTable.dirOf(index1)
+    val ident = s"${SimilarityOps.AnnCat}.g.${dir.getFileName}"
+    graft.sources.LegacyJsonTable.plant(dir,
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "vec_id BIGINT, cell BIGINT, packed BIGINT"),
+      "cell", "vec_id", Seq("""{"vec_id":1,"cell":0,"packed":0}"""),
+      filePerKey = true,
+      props = Map("graft.codebook" -> SimilarityOps.encodeCodebook(cb1)))
+    val e = intercept[Exception](iso.table(ident).collect())
+    assert(e.getMessage.contains("drop the table and rebuild it"),
+      e.getMessage)
+    assert(graft.engine.Warehouse.adopt(iso, ident, Seq("graft.codebook"))
+      .isEmpty)
+    SimilarityOps.resetAnnMemoryForTest() // what a restart leaves behind
+    val builds = SimilarityOps.annBuilds.get
+    val (index2, _) = SimilarityOps.annIndex(spark, sf)
+    assert(SimilarityOps.annBuilds.get === builds + 1, "index not rebuilt")
+    assert(index2.count() === n)
+    assert(dir.resolve("data").toFile.listFiles().map(_.getName)
+      .forall(_.endsWith(".parquet")))
+  }
 }

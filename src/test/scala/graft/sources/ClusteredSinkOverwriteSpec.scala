@@ -53,7 +53,20 @@ class ClusteredSinkOverwriteSpec extends SparkSpec {
 
   private def readBack(name: String): DataFrame =
     spark.read.schema("key LONG, bucket LONG, payload STRING")
-      .json(tableDir(name) + "/data")
+      .parquet(tableDir(name) + "/data")
+
+  /** Plant a genuine segment holding one row straight into `data/`, the
+    * way a crashed commit leaves one: no manifest entry references it. */
+  private def plantSegment(name: String, file: String,
+      key: Long, bucket: Long, payload: String): java.nio.file.Path = {
+    val f = Paths.get(tableDir(name), "data", file)
+    val seg = new graft.sources.v2.ClusteredSinkFormat.ParquetSegment(
+      f.toString, graft.sources.v2.ClusteredSink.defaultSchema)
+    seg.write(org.apache.spark.sql.catalyst.InternalRow(key, bucket,
+      org.apache.spark.unsafe.types.UTF8String.fromString(payload)))
+    seg.close()
+    f
+  }
 
   private def manifest(name: String): Seq[(String, Long)] =
     Files.readAllLines(Paths.get(tableDir(name), "_manifest.jsonl")).asScala
@@ -171,9 +184,8 @@ class ClusteredSinkOverwriteSpec extends SparkSpec {
     rows((1, 1, "a"), (2, 50, "b")).writeTo(t).append()
     // simulate a crashed prior overwrite: a data file that no manifest
     // references (landed before the manifest ATOMIC_MOVE commit point)
-    val garbage = Paths.get(tableDir("t_orphan"), "data", "part-dead-00000.json")
-    Files.write(garbage, "{\"key\":999,\"bucket\":1,\"payload\":\"ghost\"}\n"
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val garbage = plantSegment("t_orphan", "part-dead-00000.parquet",
+      999L, 1L, "ghost")
     assert(readBack("t_orphan").count() === 3) // raw reader sees the ghost...
     rows((10, 1, "A")).writeTo(t).overwrite(col("bucket") === 1)
     // ...until the next overwrite heals the directory
@@ -215,12 +227,12 @@ class ClusteredSinkOverwriteSpec extends SparkSpec {
     // dynamic key-granular semantics would have kept buckets 1 and 2;
     // the path route must truncate (clusterBy is not authoritative there)
     val back = spark.read.schema("key LONG, bucket LONG, payload STRING")
-      .json(out + "/data").as[(Long, Long, String)].collect().toSet
+      .parquet(out + "/data").as[(Long, Long, String)].collect().toSet
     assert(back === Set((30L, 3L, "c")))
   }
 
   test("ALTER TABLE ADD COLUMN is metadata-only (old rows read as null); " +
-    "DROP COLUMN hides the column; RENAME COLUMN rewrites data keys") {
+    "DROP COLUMN hides the column; RENAME COLUMN is metadata-only too") {
     val t = freshTable("t_alter")
     rows((1, 1, "a"), (2, 2, "b")).writeTo(t).append()
     // ADD: nullable column appended; existing files untouched
@@ -232,17 +244,19 @@ class ClusteredSinkOverwriteSpec extends SparkSpec {
     // read raw (file index is captured at read time, so re-read per check)
     def raw = spark.read
       .schema("key LONG, bucket LONG, payload STRING, score LONG")
-      .json(tableDir("t_alter") + "/data")
+      .parquet(tableDir("t_alter") + "/data")
     assert(raw.filter(col("score").isNull).count() === 2)
     // new writes carry the column
     Seq((3L, 3L, "c", 7L)).toDF("key", "bucket", "payload", "score")
       .writeTo(t).append()
     assert(raw.filter(col("score") === 7L).count() === 1)
-    // RENAME: data files rewritten with the new key, values intact
+    val filesAfterAppend = dataFiles("t_alter")
+    // RENAME: metadata-only, so data files keep their physical names
+    // and only the catalog resolves the new one — read through it
     spark.sql(s"ALTER TABLE $t RENAME COLUMN payload TO note")
-    val renamed = spark.read
-      .schema("key LONG, bucket LONG, note STRING, score LONG")
-      .json(tableDir("t_alter") + "/data")
+    assert(dataFiles("t_alter") === filesAfterAppend,
+      "RENAME COLUMN must not touch data")
+    val renamed = spark.table(t)
     assert(renamed.select("note").as[String].collect().toSet === Set("a", "b", "c"))
     checkManifestConsistent2("t_alter", renamed.count())
     // DROP: metadata-only; layout columns protected
@@ -261,9 +275,7 @@ class ClusteredSinkOverwriteSpec extends SparkSpec {
     rows((1, 1, "a"), (2, 2, "b")).writeTo(t).append()
     rows((3, 50, "c"), (4, 60, "d")).writeTo(t).append()
     // crash garbage is INVISIBLE to the manifest-planned read
-    Files.write(Paths.get(tableDir("t_read"), "data", "part-dead-0.json"),
-      "{\"key\":999,\"bucket\":1,\"payload\":\"ghost\"}\n"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    plantSegment("t_read", "part-dead-0.parquet", 999L, 1L, "ghost")
     assert(spark.table(t).count() === 4)
     // a cluster-key predicate prunes whole files by manifest min/max:
     // the bucket-50/60 file is never opened (files=.../NN in description)

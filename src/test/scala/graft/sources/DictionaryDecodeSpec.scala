@@ -28,7 +28,7 @@ class DictionaryDecodeSpec extends SparkSpec {
     val t = s"$cat.g.dict_strings"
     spark.sql(s"CREATE TABLE $t (key BIGINT, bucket BIGINT, " +
       "low_card STRING, high_card STRING) PARTITIONED BY (bucket) " +
-      "TBLPROPERTIES ('filePerKey'='true', 'format'='parquet')")
+      "TBLPROPERTIES ('filePerKey'='true')")
     // ONE bucket → one file → one column chunk; 120k × ~45-char unique
     // strings ≈ 5.4 MB of distinct values, far past the 1 MB dictionary
     // page default → guaranteed mid-chunk fallback on high_card

@@ -6,23 +6,23 @@ import graft.SparkSpec
 import graft.sources.v2.ClusteredSinkOverwrite
 import org.apache.spark.sql.functions._
 
-/** The ClusteredSink COLUMNAR payload (`format=parquet`, r14): the
-  * commit protocol, manifest statistics, filePerKey layout, and
-  * key-grouped reads are format-agnostic — only the per-file encoding
-  * changes. Pins:
+/** The ClusteredSink payload: every segment is parquet (r14; the only
+  * payload since the JSON-lines one was deleted). Pins:
   *
-  *   1. roundtrip fidelity: a parquet-payload table reads back
-  *      row-identical to a json-payload twin of the same data,
-  *      including nulls in every supported type;
+  *   1. roundtrip fidelity: a table reads back row-identical to the
+  *      frame written into it, including nulls in every supported type
+  *      and quote/backslash strings;
   *   2. the filePerKey manifest is single-key and the committed files
-  *      actually carry the parquet magic (not json with a new name);
+  *      actually carry the parquet magic;
   *   3. (r15 — the format matrix closes) overwrite-by-filter and
   *      dynamic overwrite copy-on-write parquet segments through the
   *      sink's own reader/writer, and streaming epochs commit parquet
   *      files; (r16) ALTER RENAME on parquet tables is METADATA-ONLY
   *      through the alias log — data files untouched, historical names
   *      resolve per file, COW upgrades names, reuse refused;
-  *   4. TRUNCATE + re-append works.
+  *   4. TRUNCATE + re-append works;
+  *   5. tables left by the deleted JSON-lines payload, and requests for
+  *      any payload but parquet, fail loudly instead of being misread.
   */
 class ParquetSinkSpec extends SparkSpec {
   private lazy val warehouse =
@@ -48,37 +48,31 @@ class ParquetSinkSpec extends SparkSpec {
     }.toDF("key", "bucket", "lval", "dval", "bval", "sval")
   }
 
-  test("parquet payload roundtrips row-identical to the json twin") {
+  test("parquet payload roundtrips row-identical to the written frame") {
     init()
-    for ((t, fmt) <- Seq(("rt_pq", "parquet"), ("rt_js", "json"))) {
-      spark.sql(s"DROP TABLE IF EXISTS $cat.g.$t")
-      spark.sql(s"CREATE TABLE $cat.g.$t " +
-        "(key BIGINT, bucket BIGINT, lval BIGINT, dval DOUBLE, " +
-        "bval BOOLEAN, sval STRING) PARTITIONED BY (bucket) " +
-        s"TBLPROPERTIES ('filePerKey'='true', 'sortBy'='key', " +
-        s"'format'='$fmt')")
-      sample.writeTo(s"$cat.g.$t").append()
-    }
+    spark.sql(s"DROP TABLE IF EXISTS $cat.g.rt_pq")
+    spark.sql(s"CREATE TABLE $cat.g.rt_pq " +
+      "(key BIGINT, bucket BIGINT, lval BIGINT, dval DOUBLE, " +
+      "bval BOOLEAN, sval STRING) PARTITIONED BY (bucket) " +
+      "TBLPROPERTIES ('filePerKey'='true', 'sortBy'='key')")
+    sample.writeTo(s"$cat.g.rt_pq").append()
     val pq = spark.table(s"$cat.g.rt_pq")
-    val js = spark.table(s"$cat.g.rt_js")
     assert(pq.count() === 1000)
-    assert(pq.exceptAll(js).count() === 0)
-    assert(js.exceptAll(pq).count() === 0)
+    assert(pq.exceptAll(sample).count() === 0)
+    assert(sample.exceptAll(pq).count() === 0)
     // column projection decodes only what is asked
     assert(pq.select(sum(col("lval"))).head.getLong(0) ===
-      js.select(sum(col("lval"))).head.getLong(0))
+      sample.select(sum(col("lval"))).head.getLong(0))
   }
 
   test("all-parquet tables execute COLUMNAR (r16): vectorized batch scan " +
       "in the plan, values identical to the row path incl. nulls") {
     init()
-    // reuse the roundtrip twins (rt_pq parquet / rt_js json)
     spark.sql(s"DROP TABLE IF EXISTS $cat.g.rt_pq")
     spark.sql(s"CREATE TABLE $cat.g.rt_pq " +
       "(key BIGINT, bucket BIGINT, lval BIGINT, dval DOUBLE, " +
       "bval BOOLEAN, sval STRING) PARTITIONED BY (bucket) " +
-      "TBLPROPERTIES ('filePerKey'='true', 'sortBy'='key', " +
-      "'format'='parquet')")
+      "TBLPROPERTIES ('filePerKey'='true', 'sortBy'='key')")
     sample.writeTo(s"$cat.g.rt_pq").append()
     val pq = spark.table(s"$cat.g.rt_pq")
     // the executed plan must contain a COLUMNAR BatchScan (witnessed by
@@ -90,22 +84,14 @@ class ParquetSinkSpec extends SparkSpec {
     assert(planStr.contains("ColumnarToRow") &&
       planStr.contains("graft-sink"),
       s"expected a columnar graft-sink scan:\n$planStr")
-    // value equality with the row-based json twin across every type,
-    // null patterns included (sample nulls each column on its own cycle)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.g.rt_js2")
-    spark.sql(s"CREATE TABLE $cat.g.rt_js2 " +
-      "(key BIGINT, bucket BIGINT, lval BIGINT, dval DOUBLE, " +
-      "bval BOOLEAN, sval STRING) PARTITIONED BY (bucket) " +
-      "TBLPROPERTIES ('filePerKey'='true', 'sortBy'='key', " +
-      "'format'='json')")
-    sample.writeTo(s"$cat.g.rt_js2").append()
-    val js = spark.table(s"$cat.g.rt_js2")
-    assert(pq.exceptAll(js).count() === 0)
-    assert(js.exceptAll(pq).count() === 0)
+    // value equality with the written frame across every type, null
+    // patterns included (sample nulls each column on its own cycle)
+    assert(pq.exceptAll(sample).count() === 0)
+    assert(sample.exceptAll(pq).count() === 0)
     // batches span multiple emit cycles (1000 rows / 16 buckets) and a
     // narrow projection still decodes correctly
     assert(pq.select(col("sval")).filter(col("sval").isNull).count() ===
-      js.select(col("sval")).filter(col("sval").isNull).count())
+      sample.select(col("sval")).filter(col("sval").isNull).count())
   }
 
   test("filePerKey manifest is single-key and files carry parquet magic") {
@@ -131,7 +117,7 @@ class ParquetSinkSpec extends SparkSpec {
     spark.sql(s"CREATE TABLE $t " +
       "(key BIGINT, bucket BIGINT, lval BIGINT, dval DOUBLE, " +
       "bval BOOLEAN, sval STRING) PARTITIONED BY (bucket) " +
-      "TBLPROPERTIES ('sortBy'='key', 'format'='parquet')")
+      "TBLPROPERTIES ('sortBy'='key')")
     sample.writeTo(t).append()
     // replace bucket 3 with a marker slice; every other bucket intact
     import spark.implicits._
@@ -176,7 +162,6 @@ class ParquetSinkSpec extends SparkSpec {
     val q = input.toDF().toDF("key", "bucket", "payload")
       .writeStream.format("graft-sink")
       .option("path", dir).option("clusterBy", "bucket").option("sortBy", "key")
-      .option("format", "parquet")
       .option("checkpointLocation", ckpt)
       .outputMode("append").start()
     try {
@@ -195,9 +180,8 @@ class ParquetSinkSpec extends SparkSpec {
       assert(new String(bytes.take(4), "US-ASCII") === "PAR1", f.toString)
     }
     // per-epoch manifests are a raw-directory surface (the batch scan
-    // plans from _manifest.jsonl only — same contract as the json
-    // epochs); the files themselves are standard parquet and read back
-    // through any parquet reader
+    // plans from _manifest.jsonl only); the files themselves are
+    // standard parquet and read back through any parquet reader
     val back = spark.read.parquet(s"$dir/data")
     assert(back.count() === 3)
     assert(back.select("key").as[Long].collect().toSet === Set(1L, 2L, 3L))
@@ -211,8 +195,7 @@ class ParquetSinkSpec extends SparkSpec {
     spark.sql(s"CREATE TABLE $cat.g.rn_pq " +
       "(key BIGINT, bucket BIGINT, amount DOUBLE, label STRING) " +
       "PARTITIONED BY (bucket) " +
-      "TBLPROPERTIES ('filePerKey'='true', 'sortBy'='key', " +
-      "'format'='parquet')")
+      "TBLPROPERTIES ('filePerKey'='true', 'sortBy'='key')")
     import spark.implicits._
     val first = (0L until 400L).map(i => (i, i % 8,
       if (i % 5 == 0) None else Some(i * 1.5),
@@ -282,7 +265,7 @@ class ParquetSinkSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
       "(key BIGINT, bucket BIGINT, a DOUBLE, b DOUBLE) " +
-      "PARTITIONED BY (bucket) TBLPROPERTIES ('format'='parquet')")
+      "PARTITIONED BY (bucket)")
     (0L until 100L).map(i => (i, i % 4, i * 1.0, i * 100.0))
       .toDF("key", "bucket", "a", "b").writeTo(t).append()
     spark.sql(s"ALTER TABLE $t RENAME COLUMN a TO c")
@@ -317,7 +300,7 @@ class ParquetSinkSpec extends SparkSpec {
     val t = s"$cat.g.evolve_pq"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (key BIGINT, bucket BIGINT, v DOUBLE) " +
-      "PARTITIONED BY (bucket) TBLPROPERTIES ('format'='parquet')")
+      "PARTITIONED BY (bucket)")
     (0L until 100L).map(i => (i, i % 4, i * 1.5))
       .toDF("key", "bucket", "v").writeTo(t).append()
     val dataDir = new java.io.File(warehouse, "g/evolve_pq/data")
@@ -368,7 +351,7 @@ class ParquetSinkSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
       "(key BIGINT, bucket BIGINT, a DOUBLE, b DOUBLE) " +
-      "PARTITIONED BY (bucket) TBLPROPERTIES ('format'='parquet')")
+      "PARTITIONED BY (bucket)")
     (0L until 100L).map(i => (i, i % 4, i * 1.0, i * 100.0))
       .toDF("key", "bucket", "a", "b").writeTo(t).append()
     // give the doomed column an alias history too: both its current
@@ -393,6 +376,57 @@ class ParquetSinkSpec extends SparkSpec {
       (0L until 100L).map(_ * 100.0).sum)
   }
 
+  test("JSON-era tables and non-parquet payload requests fail loudly") {
+    init()
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val schema = StructType(Seq(StructField("key", LongType),
+      StructField("bucket", LongType), StructField("payload", StringType)))
+    val rows = Seq("""{"key":1,"bucket":0,"payload":"a"}""")
+    // a table the JSON-lines payload left behind: no format entry
+    // (pre-r14 metadata) or an explicit "json" one. Loading refuses it,
+    // naming the table and the fix.
+    for ((t, fmt) <- Seq(("legacy_nofmt", None), ("legacy_json", Some("json")))) {
+      LegacyJsonTable.plant(Paths.get(warehouse, "g", t), schema, "bucket",
+        "key", rows, format = fmt)
+      val e = intercept[Exception](spark.table(s"$cat.g.$t").collect())
+      assert(e.getMessage.contains(t) &&
+        e.getMessage.contains("drop the table and rebuild it"), e.getMessage)
+      // the catalog's own DROP still works, and the name is free again
+      spark.sql(s"DROP TABLE $cat.g.$t")
+      assert(!spark.catalog.tableExists(s"$cat.g.$t"))
+    }
+    // a path-based scan whose manifest names a .json segment fails at
+    // planning: the segment is never decoded as parquet
+    val raw = Files.createTempDirectory("legacy_raw")
+    LegacyJsonTable.plant(raw, schema, "bucket", "key", rows)
+    val df = spark.read.format("graft-sink").schema(schema)
+      .option("path", raw.toString).load()
+    val e = intercept[Exception](df.queryExecution.executedPlan)
+    assert(e.getMessage.contains("part-legacy-00000.json") &&
+      e.getMessage.contains("drop the table and rebuild it"), e.getMessage)
+    // a read schema outside the type contract fails at planning too
+    val dir = Files.createTempDirectory("typed_raw").toString
+    sample.select("key", "bucket").write.format("graft-sink")
+      .option("path", dir).option("clusterBy", "bucket").mode("append").save()
+    val e2 = intercept[Exception](spark.read.format("graft-sink")
+      .schema("key BIGINT, bucket BIGINT, d DATE").option("path", dir).load()
+      .queryExecution.executedPlan)
+    assert(e2.getMessage.contains("unsupported type"), e2.getMessage)
+    // asking for any payload but parquet fails before any task runs
+    val e3 = intercept[Exception](spark.sql(s"CREATE TABLE $cat.g.want_json " +
+      "(key BIGINT, bucket BIGINT) PARTITIONED BY (bucket) " +
+      "TBLPROPERTIES ('format'='json')"))
+    assert(e3.getMessage.contains("unsupported format 'json'"), e3.getMessage)
+    assert(!spark.catalog.tableExists(s"$cat.g.want_json"))
+    val out = Files.createTempDirectory("want_json").toString
+    val e4 = intercept[Exception](sample.select("key", "bucket")
+      .write.format("graft-sink").option("path", out)
+      .option("clusterBy", "bucket").option("format", "json")
+      .mode("append").save())
+    assert(e4.getMessage.contains("unsupported format 'json'"), e4.getMessage)
+    assert(!Files.exists(Paths.get(out, "data")))
+  }
+
   test("TRUNCATE + re-append works on the parquet payload") {
     init()
     spark.sql(s"TRUNCATE TABLE $cat.g.rt_pq")
@@ -407,7 +441,7 @@ class ParquetSinkSpec extends SparkSpec {
     val t = s"$cat.g.addcol_pq"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (key BIGINT, bucket BIGINT, sval STRING) " +
-      "PARTITIONED BY (bucket) TBLPROPERTIES ('format'='parquet')")
+      "PARTITIONED BY (bucket)")
     import spark.implicits._
     (0L until 100L).map(i => (i, i % 4, s"v$i")).toDF("key", "bucket", "sval")
       .writeTo(t).append()
@@ -435,7 +469,7 @@ class ParquetSinkSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (key BIGINT, bucket BIGINT) " +
       "PARTITIONED BY (bucket) " +
-      "TBLPROPERTIES ('filePerKey'='true', 'format'='parquet')")
+      "TBLPROPERTIES ('filePerKey'='true')")
     import spark.implicits._
     (0L until 200L).map(i => (i, i % 8)).toDF("key", "bucket")
       .writeTo(t).append()
@@ -474,8 +508,7 @@ class ParquetSinkSpec extends SparkSpec {
       spark.sql(s"CREATE TABLE $cat.g.$t " +
         "(key BIGINT, bucket BIGINT, lval BIGINT, dval DOUBLE, " +
         "bval BOOLEAN, sval STRING) PARTITIONED BY (bucket) " +
-        "TBLPROPERTIES ('filePerKey'='true', 'sortBy'='key', " +
-        "'format'='parquet')")
+        "TBLPROPERTIES ('filePerKey'='true', 'sortBy'='key')")
       sample.writeTo(s"$cat.g.$t").append()
     }
     val iso = spark.newSession()
