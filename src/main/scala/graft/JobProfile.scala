@@ -52,7 +52,10 @@ object JobProfile {
         Option(jobs.get(e.jobId)).foreach(_.t1 = e.time)
       }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        Option(stageToJob.get(e.stageId)).map(jobs.get).filter(_ != null)
+        // containsKey, not Option(get): the map's values unbox to Int, so
+        // get() of an unknown stage returns 0 and would charge job 0
+        Option.when(stageToJob.containsKey(e.stageId))(stageToJob.get(e.stageId))
+          .flatMap(id => Option(jobs.get(id)))
           .foreach { j =>
             j.synchronized {
               j.tasks += 1

@@ -22,8 +22,10 @@ object Bronze {
     // S5 file-metadata capture: when the upstream didn't materialize
     // source_file_path/time columns (Auto Loader would have), recover them
     // from Spark's hidden _metadata struct for file-based sources
-    // (models/bronze/customers_bronze.sql:40-41)
-    val hasFileMetadata =
+    // (models/bronze/customers_bronze.sql:40-41). Lazy: the probe is a
+    // failing analysis on non-file inputs, which the session's listeners
+    // (Observation's among them) then log as an error
+    lazy val hasFileMetadata =
       scala.util.Try(raw.select(col("_metadata.file_path"))).isSuccess
     raw.select(target.fields.toSeq.map { f =>
       val c =

@@ -1,7 +1,11 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import graft.util.Parallel
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import scala.collection.mutable
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
 /** One node of the pipeline DAG — the Spark-native analogue of a dbt model
   * (reference: dbt manifest / `{{ ref(...) }}` graph, SURVEY.md §3).
@@ -18,9 +22,11 @@ final case class Model(
 /** Where materialized model outputs go — the dbt `+materialized: table`
   * full-refresh sink (dbt_project.yml:28-43). */
 trait Sink {
-  /** Persist and return a re-readable DataFrame of what was written
-    * (the audit hook must count the *written* table, not the pre-write
-    * plan — models/bronze/customers_bronze.sql:16-17). */
+  /** Persist `df` and return a re-readable DataFrame of what was written.
+    * `write` must execute `df`, once, as the write's own query: [[Dag]]
+    * takes the audit's target count from an observation on `df`. A sink
+    * that never runs it fails the run, naming the model; a second run
+    * of it, or a global sort above it, would count rows twice. */
   def write(layer: String, name: String, df: DataFrame): DataFrame
 }
 
@@ -57,13 +63,13 @@ object Sink {
     * the warehouse consumers of the reference. Models in `partitions`
     * are written partitioned (catalog-tracked partition pruning).
     *
-    * Catalog writes are serialized on a process-wide lock: models at the
-    * same DAG level materialize from concurrent threads, and embedded
-    * catalogs (Derby-backed Hive, in-memory) do not take kindly to
-    * concurrent CREATE DATABASE / CREATE TABLE. Local-mode concession:
-    * against a production metastore (the deployment this sink models),
-    * narrow the lock to the DDL and let the CTAS data writes overlap
-    * like dbt's `threads: 4` does (profiles.yml:12).
+    * Only the DDL holds the process-wide [[ddlLock]]: the `CREATE
+    * DATABASE IF NOT EXISTS` here and the audit-table append in
+    * [[Dag.run]]. The CTAS data writes of same-level models overlap, as
+    * dbt's `threads: 4` runs them (profiles.yml:12). DagConcurrencySpec
+    * is the evidence that the session catalog takes concurrent
+    * overwriting `saveAsTable`s, plain and partitioned, into one
+    * database while `CREATE DATABASE IF NOT EXISTS` races them.
     */
   final case class Table(schema: String, format: String = "parquet",
       partitions: Map[String, Seq[String]] = Map.empty) extends Sink {
@@ -71,13 +77,11 @@ object Sink {
       val spark = df.sparkSession
       val db = s"${schema}_$layer"
       val fqn = s"$db.$name"
-      Sink.ddlLock.synchronized {
-        spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-        val writer = df.write.mode("overwrite").format(format)
-        partitions.get(name).filter(_.nonEmpty)
-          .fold(writer)(cols => writer.partitionBy(cols: _*))
-          .saveAsTable(fqn)
-      }
+      Sink.ddlLock.synchronized(spark.sql(s"CREATE DATABASE IF NOT EXISTS $db"))
+      val writer = df.write.mode("overwrite").format(format)
+      partitions.get(name).filter(_.nonEmpty)
+        .fold(writer)(cols => writer.partitionBy(cols: _*))
+        .saveAsTable(fqn)
       spark.table(fqn)
     }
   }
@@ -91,10 +95,16 @@ object Sink {
   * (here: Sink.write), each followed by the row-count reconciliation
   * INSERT (models/bronze/customers_bronze.sql:4-19).
   *
-  * Scale note: models at the same depth are independent Spark jobs; the
-  * scheduler can run them concurrently (dbt `threads: 4`,
-  * profiles.yml:12). We submit them from a fixed thread pool so
-  * independent stages overlap cluster utilization.
+  * Levels run one after another; the models of a level run concurrently
+  * (dbt `threads: 4`, profiles.yml:12) through
+  * [[graft.util.Parallel.inParallel]], at most `parallelism` at once. A
+  * failing model lets its siblings finish writing, then `run` rethrows
+  * its exception and no later level starts.
+  *
+  * Audit counts are observed during the write: each model's target
+  * count is an [[org.apache.spark.sql.Observation]] on the frame handed
+  * to the sink, and its source count is its first dependency's target
+  * count. Only raw inputs are counted with a job of their own.
   */
 final class Dag(models: Seq[Model], sink: Sink, clock: Clock = Clock.System,
     auditTable: Option[String] = None) {
@@ -128,47 +138,42 @@ final class Dag(models: Seq[Model], sink: Sink, clock: Clock = Clock.System,
     val spark = inputs.values.headOption.map(_.sparkSession)
       .getOrElse(SparkSession.active)
     val outputs = mutable.Map[String, DataFrame]() ++ inputs
+    // each written model's target count: its dependents' source count
+    val counts = mutable.Map[String, Long]()
     val audit = mutable.ArrayBuffer[Row]()
     val lock = new Object
 
+    def runModel(m: Model): Unit = {
+      val depMap = lock.synchronized(outputs.toMap)
+      val observed = Observation()
+      val written = sink.write(m.layer, m.name,
+        m.build(depMap).observe(observed, count(lit(1))))
+      val tgtCount = Dag.observedRows(observed, m.name)
+      // audit post-hook: source count = first dependency's row count,
+      // target count = rows the write ran, bad_records = 0
+      val srcCount = m.deps.headOption.map(d =>
+        lock.synchronized(counts.get(d)).getOrElse(depMap(d).count()))
+        .getOrElse(0L)
+      lock.synchronized {
+        outputs(m.name) = written
+        counts(m.name) = tgtCount
+        // the injected clock — NOT the wall clock — so audit rows are
+        // deterministic goldens under Clock.Fixed
+        audit += Row(m.name, m.layer, java.sql.Timestamp.from(clock.instant),
+          srcCount, tgtCount, 0L)
+      }
+    }
+
     // level-by-level: all models whose deps are satisfied run concurrently
     val pending = mutable.LinkedHashSet[String](topoOrder: _*)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    try {
-      while (pending.nonEmpty) {
-        val ready = pending.filter(n =>
-          byName(n).deps.forall(d => lock.synchronized(outputs.contains(d)))).toSeq
-        require(ready.nonEmpty, s"unsatisfiable deps among $pending")
-        val futures = ready.map { n =>
-          scala.concurrent.Future {
-            val m = byName(n)
-            val depMap = lock.synchronized(outputs.toMap)
-            val written = sink.write(m.layer, m.name, m.build(depMap))
-            // audit post-hook: source count = first dependency's row count,
-            // target count = written table's row count, bad_records = 0
-            val srcCount = m.deps.headOption
-              .map(d => depMap(d).count()).getOrElse(0L)
-            val tgtCount = written.count()
-            lock.synchronized {
-              outputs(n) = written
-              // the injected clock — NOT the wall clock — so audit rows are
-              // deterministic goldens under Clock.Fixed
-              audit += Row(m.name, m.layer,
-                java.sql.Timestamp.from(clock.instant),
-                srcCount, tgtCount, 0L)
-            }
-          }
-        }
-        import scala.concurrent.duration._
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(futures), 2.hours)
-        pending --= ready
-      }
-    } finally pool.shutdown()
+    while (pending.nonEmpty) {
+      val ready = pending.filter(n => byName(n).deps.forall(outputs.contains)).toSeq
+      require(ready.nonEmpty, s"unsatisfiable deps among $pending")
+      Parallel.inParallel(ready.map(n => () => runModel(byName(n))), parallelism)
+      pending --= ready
+    }
 
-    // rows were appended by concurrently-finishing futures; re-establish
+    // rows were appended by concurrently-finishing models; re-establish
     // run (= topological) order so the audit log is deterministic across
     // runs, as documented
     val topoIndex = topoOrder.zipWithIndex.toMap
@@ -190,4 +195,18 @@ final class Dag(models: Seq[Model], sink: Sink, clock: Clock = Clock.System,
     }
     (outputs.toMap -- inputs.keys, auditDf)
   }
+}
+
+object Dag {
+  /** A write has run when `Sink.write` returns; only the listener-bus
+    * delivery of its observed count remains (milliseconds). The bound
+    * separates a slow bus from a sink that never ran the frame. */
+  private val ObservedWait = 60.seconds
+
+  private def observedRows(o: Observation, model: String): Long =
+    try Await.result(o.future, ObservedWait).getLong(0)
+    catch { case _: java.util.concurrent.TimeoutException =>
+      throw new IllegalStateException(s"model $model: no row count observed " +
+        s"within $ObservedWait of its write; the sink did not run its frame")
+    }
 }

@@ -845,7 +845,7 @@ object IncrementalGold {
       clDelta: DataFrame): Map[String, DataFrame] = {
     // the two Δ-partial checkpoints are independent small jobs —
     // overlap them (guide §2.6)
-    val Seq(dPt, dCpm) = graft.streaming.VersionedStateStore.inParallel(Seq(
+    val Seq(dPt, dCpm) = graft.util.Parallel.inParallel(Seq(
       () => ptPartials(polDelta).localCheckpoint(true),
       () => cpmPartials(clDelta).localCheckpoint(true)))
     val cpmSlice = probe.slice("cpm", dPt.select("policy_id"))
@@ -864,7 +864,7 @@ object IncrementalGold {
   def customer360DeltaFramesKeyed(probe: StateProbe, custDelta: DataFrame,
       polDelta: DataFrame, clDelta: DataFrame): Map[String, DataFrame] = {
     // independent Δ-partial checkpoints — overlap them (guide §2.6)
-    val Seq(dPc, dCpc) = graft.streaming.VersionedStateStore.inParallel(Seq(
+    val Seq(dPc, dCpc) = graft.util.Parallel.inParallel(Seq(
       () => c360PcPartials(polDelta).localCheckpoint(true),
       () => c360CpcPartials(clDelta).localCheckpoint(true)))
     val reattr = attributedCust(dPc,
@@ -889,14 +889,14 @@ object IncrementalGold {
     // the three Δ-partial checkpoints are independent small jobs, and
     // so are the three term-dimension checkpoints below them — overlap
     // each group (guide §2.6; serial they left local[N] mostly idle)
-    val Seq(dCl, dP, dC) = graft.streaming.VersionedStateStore.inParallel(Seq(
+    val Seq(dCl, dP, dC) = graft.util.Parallel.inParallel(Seq(
       () => coClPartials(clDelta).localCheckpoint(true),
       () => coPPartials(polDelta).localCheckpoint(true),
       () => coCPartials(custDelta).localCheckpoint(true)))
     def clNewSlice(keys: DataFrame): DataFrame =
       fold(Seq(probe.slice("cl", keys), sliceOf(dCl, keys)), OpsSpecs("cl"))
     val Seq(pSlice1, dims2, dims3) =
-      graft.streaming.VersionedStateStore.inParallel(Seq(
+      graft.util.Parallel.inParallel(Seq(
         // ΔCL ⊗ P₀ ⊗ C₀
         () => probe.slice("p", dCl.select("policy_id"))
           .localCheckpoint(true),

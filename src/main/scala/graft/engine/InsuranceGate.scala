@@ -605,7 +605,7 @@ object InsuranceGate extends QueryModule {
        |    created_at, updated_at, source_file_path, source_file_time
        |  FROM pm_deduped WHERE rn = 1)
        |SELECT * FROM pm_cleaned""".stripMargin) { (s, d) =>
-    Silver.premiums(Bronze.premiums(rawPremiumsSpark(s, d)), clock)
+    Silver.premiums(Bronze.premiums(rawPremiumsSpark(s, d)))
   }
 
   // ------------------------------------------------------------ gate: gold
@@ -2076,7 +2076,7 @@ object InsuranceGate extends QueryModule {
     graft.util.TmpReaper.track(out)
     // the per-table Δ writes are independent small jobs — overlap them
     // (guide §2.6)
-    graft.streaming.VersionedStateStore.inParallel(deltas.toSeq.map {
+    graft.util.Parallel.inParallel(deltas.toSeq.map {
       case (t, df) => () => df.write.mode("overwrite").parquet(s"$out/$t") })
     // lazy: each folded table is consumed exactly once (by the mart)
     martTables.map { t =>

@@ -27,7 +27,7 @@ object InsurancePipeline {
     Model("claims_silver", "silver", Seq("claims_bronze"),
       d => Silver.claims(d("claims_bronze"), clock)),
     Model("premiums_silver", "silver", Seq("premiums_bronze"),
-      d => Silver.premiums(d("premiums_bronze"), clock)),
+      d => Silver.premiums(d("premiums_bronze"))),
 
     Model("gold_customer_360", "gold",
       Seq("customers_silver", "policies_silver", "claims_silver"),

@@ -172,7 +172,7 @@ object Silver {
   /** models/silver/premiums_silver.sql — note the different shape: dedup
     * runs FIRST (ordered by source_file_time only), cleaning second, and
     * negative money amounts clamp to 0 instead of flagging. */
-  def premiums(bronze: DataFrame, clock: Clock = Clock.System): DataFrame = {
+  def premiums(bronze: DataFrame): DataFrame = {
     val typed = bronze.select(
       trim(col("premium_id")).cast(StringType).as("premium_id"),
       trim(col("policy_id")).cast(StringType).as("policy_id"),

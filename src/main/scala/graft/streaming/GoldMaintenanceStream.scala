@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.engine.IncrementalGold
+import graft.util.Parallel
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -105,7 +106,7 @@ final class VersionedStateStore(spark: SparkSession, stateDir: String,
       materialize: Boolean = true): Map[String, DataFrame] = {
     // per-table fold+checkpoint jobs are independent — overlap them
     // (guide §2.6: small jobs leave the cluster idle serially)
-    VersionedStateStore.inParallel(wanted.map { t => () =>
+    Parallel.inParallel(wanted.map { t => () =>
       val frames = chain(id, t)
       if (frames.lengthCompare(1) == 0) t -> frames.head
       // eager checkpoint (default): the folded view is consumed several
@@ -203,7 +204,7 @@ final class VersionedStateStore(spark: SparkSession, stateDir: String,
     // per-table writes are independent jobs on disjoint directories —
     // overlap them (guide §2.6); the commit marker still lands only
     // after EVERY write returned, so the atomicity contract is intact
-    VersionedStateStore.inParallel(tables.map { t => () =>
+    Parallel.inParallel(tables.map { t => () =>
       val out = new Path(dir, t)
       clusterSpecs.get(t) match {
         case Some(cs) =>
@@ -244,7 +245,7 @@ final class VersionedStateStore(spark: SparkSession, stateDir: String,
     } else {
       val dir = new Path(root, id.toString)
       // independent |Δ|-sized writes — overlap them (guide §2.6)
-      VersionedStateStore.inParallel(tables.map { t => () =>
+      Parallel.inParallel(tables.map { t => () =>
         deltas(t).write.mode("overwrite").parquet(new Path(dir, t).toString)
       })
       fs.create(new Path(dir, "_DELTA"), true).close()
@@ -257,72 +258,6 @@ final class VersionedStateStore(spark: SparkSession, stateDir: String,
 object VersionedStateStore {
   val DefaultRetain = 3
   val DefaultCompactEvery = 4
-
-  /** Dedicated pool for [[inParallel]]: CACHED (grows on demand, so a
-    * nested inParallel — loadTables inside a delta-builder group —
-    * can never starve: every blocked outer task's inner tasks get
-    * fresh threads), daemon, idle threads reclaimed after 60 s. NOT
-    * ExecutionContext.global: that pool is fixed at CPU count and
-    * blocking Spark actions on it starve unrelated users (r18 advice). */
-  private lazy val ioPool: java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newCachedThreadPool(
-      new java.util.concurrent.ThreadFactory {
-        private val n = new java.util.concurrent.atomic.AtomicInteger
-        def newThread(r: Runnable): Thread = {
-          val t = new Thread(r, s"graft-state-io-${n.incrementAndGet()}")
-          t.setDaemon(true)
-          t
-        }
-      })
-
-  /** Run independent per-table Spark jobs concurrently (guide §2.6:
-    * actions are only sequential because the driver calls them
-    * sequentially). State-store jobs are SMALL — a handful of tasks
-    * plus commit IO — so one job leaves most of local[N] idle and the
-    * scheduler back-fills the next job's tasks into the gap; the
-    * measured four-mart fold win (SCALE.md r18, 20–30% on every batch
-    * class) is this same overlap one level up. NOT used for jobs that
-    * each saturate the cluster (the sharedCdcDeltas builds — measured
-    * slower concurrent, r16).
-    *
-    * Failure semantics (r18 advice): EVERY task runs to completion
-    * before the first failure is rethrown — fail-fast would leave
-    * sibling Spark write jobs running detached while the caller
-    * retries into the same version directory, and a later attempt
-    * could _COMMIT-mark a directory a zombie write was still mutating.
-    * The guarantee holds PER CALL, not through nesting: an inner
-    * inParallel rethrows once ITS tasks are done, while the outer
-    * call's other tasks may still run until the outer barrier.
-    *
-    * Fan-out: the pool is unbounded (one thread per concurrently
-    * running task), so callers pass SMALL task lists — today at most
-    * one task per state table or per independent probe.
-    *
-    * Caveat: Spark's thread-local job descriptions/groups propagate to
-    * pooled threads only at THREAD CREATION (InheritableThreadLocal on
-    * a reused cached pool is unreliable) — do not combine inParallel
-    * with setJobGroup-based cancellation without explicitly copying
-    * local properties into each task. Nothing in the engine does. */
-  private[graft] def inParallel[A](tasks: Seq[() => A]): Seq[A] =
-    if (tasks.lengthCompare(1) <= 0) tasks.map(_())
-    else {
-      val futs = tasks.map { t =>
-        ioPool.submit(new java.util.concurrent.Callable[A] {
-          def call(): A = t()
-        })
-      }
-      // in-order get() on every future = a barrier over ALL tasks;
-      // only then surface the first failure (unwrapped)
-      val results = futs.map(f => scala.util.Try(f.get()))
-      results.collectFirst { case scala.util.Failure(e) =>
-        throw (e match {
-          case ee: java.util.concurrent.ExecutionException
-            if ee.getCause != null => ee.getCause
-          case other => other
-        })
-      }
-      results.map(_.get)
-    }
 
   /** Committed version ids under `root`, ascending — the ONE place
     * that knows the directory layout and the `_COMMIT` marker name
@@ -550,28 +485,6 @@ object GoldMaintenanceStream {
     }
   }
 
-  /** [[foldWith]]'s LSM twin for fact-grain state (r16): the bootstrap
-    * batch saves a full BASE (partials == state there anyway); every
-    * later batch persists only its DELTA FRAMES — write cost ∝ |Δ| —
-    * and [[VersionedStateStore]] folds base+deltas on read, compacting
-    * every few batches. */
-  private def foldDelta[S](df: DataFrame, id: Long,
-      store: VersionedStateStore, load: Long => S,
-      init: DataFrame => S, framesOf: S => Map[String, DataFrame],
-      deltasOf: (S, DataFrame) => Map[String, DataFrame],
-      martOf: S => DataFrame): Option[DataFrame] = {
-    val last = store.lastCommitted
-    if (last.exists(_ >= id)) Some(martOf(load(last.get)))
-    else if (df.isEmpty) last.map(l => martOf(load(l)))
-    else {
-      last match {
-        case None => store.save(id, framesOf(init(df)))
-        case Some(l) => store.saveDelta(id, deltasOf(load(l), df))
-      }
-      Some(martOf(load(id)))
-    }
-  }
-
   /** [[StateProbe]] over one committed store version — each probe term
     * reads a Δ-keyed, bucket-pruned slice instead of the folded full
     * table. */
@@ -587,8 +500,11 @@ object GoldMaintenanceStream {
   def probeAt(store: VersionedStateStore,
       id: Long): IncrementalGold.StateProbe = new StoreProbe(store, id)
 
-  /** [[foldDelta]]'s Δ-KEYED twin (r17 verdict task 1) — the steady
-    * state never folds or materializes a full fact-adjacent table:
+  /** [[foldWith]]'s LSM twin for fact-grain state: the bootstrap batch
+    * saves a full BASE; every later batch persists only its Δ-KEYED
+    * delta frames (write cost ∝ |Δ|), and [[VersionedStateStore]] folds
+    * base+deltas on read. The steady state never folds or materializes
+    * a full fact-adjacent table:
     *   - delta frames read state only through [[StoreProbe]] slices
     *     (Δ-keyed semi-joins over bucket-pruned base scans);
     *   - the mart read folds ONLY the mart-grain tables;
@@ -1011,9 +927,10 @@ object GoldMaintenanceStream {
     * verdict task 5): each entity's signed delta is parsed and
     * materialized once — projected to the union of the columns any
     * maintainer reads — instead of 4 maintainers × 3 entities JSON
-    * parses of the same batch. With `concurrent` the four folds run on
-    * separate threads (each fold is its own chain of Spark jobs; the
-    * scheduler interleaves their stages over the shared cores) — the
+    * parses of the same batch. With `concurrent` the four folds run
+    * through [[Parallel.inParallel]], so a failing fold surfaces only
+    * after its siblings finished (each fold is its own chain of Spark
+    * jobs; the scheduler interleaves their stages over the shared cores) — the
     * topology a multi-tenant maintainer service would run, measured
     * against the serial fold in IvmSoak. Per-mart exactly-once
     * commit discipline is unchanged: the folds share ONLY the
@@ -1040,16 +957,10 @@ object GoldMaintenanceStream {
         retain)),
       "ops" -> (() => foldOpsFrom(df, (cu, pol, cl), id, sub("ops"),
         retain)))
-    val results: Seq[(String, Option[DataFrame])] =
-      if (!concurrent) folds.map { case (n, f) => n -> f() }
-      else {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: ExecutionContext = ExecutionContext.global
-        val fs = folds.map { case (n, f) => Future(n -> f()) }
-        Await.result(Future.sequence(fs), Duration.Inf)
-      }
-    results.collect { case (n, Some(m)) => n -> m }.toMap
+    val results: Seq[Option[DataFrame]] =
+      if (!concurrent) folds.map(_._2())
+      else Parallel.inParallel(folds.map(_._2))
+    folds.map(_._1).zip(results).collect { case (n, Some(m)) => n -> m }.toMap
   }
 
   /** Wire the four-mart maintainer to an at-least-once seq-stamped CDC

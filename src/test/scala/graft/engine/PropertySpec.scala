@@ -42,7 +42,7 @@ class PropertySpec extends SparkSpec {
   test("premiums silver: dedup idempotent, clamps non-negative, PK unique") {
     forSamples(Gen.listOfN(60, premiumRowGen), 5) { rows =>
       {
-        val silver = Silver.premiums(premiumsDf(rows), clock).cache()
+        val silver = Silver.premiums(premiumsDf(rows)).cache()
         // PK uniqueness after dedup
         val n = silver.count()
         assert(silver.select("premium_id").distinct().count() === n)

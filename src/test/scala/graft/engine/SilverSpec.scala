@@ -14,7 +14,7 @@ class SilverSpec extends SparkSpec {
   lazy val claims = Silver.claims(
     Bronze.claims(Fixtures.rawClaims(spark)), clock).cache()
   lazy val premiums = Silver.premiums(
-    Bronze.premiums(Fixtures.rawPremiums(spark)), clock).cache()
+    Bronze.premiums(Fixtures.rawPremiums(spark))).cache()
 
   test("customers: missing-PK rows dropped, duplicates deduped to latest") {
     assert(customers.count() === 4) // 6 raw - 2 missing PK - 1 dup

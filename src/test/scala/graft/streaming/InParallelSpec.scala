@@ -3,9 +3,10 @@ package graft.streaming
 import java.util.concurrent.atomic.AtomicInteger
 import java.util.concurrent.CountDownLatch
 
+import graft.util.Parallel
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[VersionedStateStore.inParallel]] contract (r18 advice + verdict
+/** [[Parallel.inParallel]] contract (r18 advice + verdict
   * task 4): a dedicated cached pool (nesting can never starve), and
   * gather-ALL-before-rethrow failure semantics — no sibling task may
   * still be running when the first failure escapes, because the caller
@@ -19,8 +20,8 @@ class InParallelSpec extends AnyFunSuite {
     // the cached pool must grow through it.
     val leaves = 8 * 8
     val started = new CountDownLatch(leaves)
-    val out = VersionedStateStore.inParallel((1 to 8).map { i => () =>
-      VersionedStateStore.inParallel((1 to 8).map { j => () =>
+    val out = Parallel.inParallel((1 to 8).map { i => () =>
+      Parallel.inParallel((1 to 8).map { j => () =>
         started.countDown()
         started.await() // every leaf blocks until ALL leaves run
         i * 10 + j
@@ -33,7 +34,7 @@ class InParallelSpec extends AnyFunSuite {
     val stillRunning = new AtomicInteger(0)
     val failNow = new CountDownLatch(1)
     val e = intercept[RuntimeException] {
-      VersionedStateStore.inParallel(Seq(
+      Parallel.inParallel(Seq(
         // the failer: throws as soon as the slow sibling is mid-flight
         () => {
           failNow.await()
@@ -55,7 +56,7 @@ class InParallelSpec extends AnyFunSuite {
   }
 
   test("results preserve task order") {
-    val out = VersionedStateStore.inParallel((1 to 16).map { i => () =>
+    val out = Parallel.inParallel((1 to 16).map { i => () =>
       Thread.sleep((17 - i) * 5L) // later tasks finish first
       i
     })
