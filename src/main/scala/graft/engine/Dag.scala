@@ -101,10 +101,13 @@ object Sink {
   * failing model lets its siblings finish writing, then `run` rethrows
   * its exception and no later level starts.
   *
-  * Audit counts are observed during the write: each model's target
-  * count is an [[org.apache.spark.sql.Observation]] on the frame handed
-  * to the sink, and its source count is its first dependency's target
-  * count. Only raw inputs are counted with a job of their own.
+  * Audit counts are observed during the writes, never counted with a
+  * job of their own: each model's target count is an
+  * [[org.apache.spark.sql.Observation]] on the frame handed to the
+  * sink, and its source count is its first dependency's target count.
+  * A raw input carries an Observation too, so its count arrives with
+  * the first write that reads it: a model must read its first
+  * dependency, or the run fails after a 60 s wait, naming it.
   */
 final class Dag(models: Seq[Model], sink: Sink, clock: Clock = Clock.System,
     auditTable: Option[String] = None) {
@@ -137,7 +140,10 @@ final class Dag(models: Seq[Model], sink: Sink, clock: Clock = Clock.System,
       : (Map[String, DataFrame], DataFrame) = {
     val spark = inputs.values.headOption.map(_.sparkSession)
       .getOrElse(SparkSession.active)
-    val outputs = mutable.Map[String, DataFrame]() ++ inputs
+    // every raw input is observed before any model reads it
+    val inputObs = inputs.map { case (n, _) => n -> Observation() }
+    val outputs = mutable.Map[String, DataFrame]() ++ inputs.map {
+      case (n, df) => n -> df.observe(inputObs(n), count(lit(1))) }
     // each written model's target count: its dependents' source count
     val counts = mutable.Map[String, Long]()
     val audit = mutable.ArrayBuffer[Row]()
@@ -148,12 +154,12 @@ final class Dag(models: Seq[Model], sink: Sink, clock: Clock = Clock.System,
       val observed = Observation()
       val written = sink.write(m.layer, m.name,
         m.build(depMap).observe(observed, count(lit(1))))
-      val tgtCount = Dag.observedRows(observed, m.name)
+      val tgtCount = Dag.observedRows(observed, s"model ${m.name}")
       // audit post-hook: source count = first dependency's row count,
       // target count = rows the write ran, bad_records = 0
-      val srcCount = m.deps.headOption.map(d =>
-        lock.synchronized(counts.get(d)).getOrElse(depMap(d).count()))
-        .getOrElse(0L)
+      val srcCount = m.deps.headOption.fold(0L)(d =>
+        lock.synchronized(counts.get(d)).getOrElse(
+          Dag.observedRows(inputObs(d), s"input $d of model ${m.name}")))
       lock.synchronized {
         outputs(m.name) = written
         counts(m.name) = tgtCount
@@ -199,14 +205,15 @@ final class Dag(models: Seq[Model], sink: Sink, clock: Clock = Clock.System,
 
 object Dag {
   /** A write has run when `Sink.write` returns; only the listener-bus
-    * delivery of its observed count remains (milliseconds). The bound
-    * separates a slow bus from a sink that never ran the frame. */
+    * delivery of its observed counts remains (milliseconds). The bound
+    * separates a slow bus from a sink or model that never ran the
+    * observed frame. */
   private val ObservedWait = 60.seconds
 
-  private def observedRows(o: Observation, model: String): Long =
+  private def observedRows(o: Observation, what: String): Long =
     try Await.result(o.future, ObservedWait).getLong(0)
     catch { case _: java.util.concurrent.TimeoutException =>
-      throw new IllegalStateException(s"model $model: no row count observed " +
-        s"within $ObservedWait of its write; the sink did not run its frame")
+      throw new IllegalStateException(s"$what: no row count observed " +
+        s"within $ObservedWait of the write; its frame never ran")
     }
 }

@@ -651,7 +651,6 @@ object InsuranceGate extends QueryModule {
        |FROM policy_base pb
        |LEFT JOIN claims_by_type cp
        |  ON pb.policy_type = cp.policy_type AND pb.policy_month = cp.claim_month""".stripMargin) { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
     import graft.ops.RelationalOps.dsum
     val policies = policiesSilver(s, d)
     val claims = claimsSilver(s, d)
@@ -760,7 +759,6 @@ object InsuranceGate extends QueryModule {
        |       WHEN loss_ratio <= 1.0 THEN 'Acceptable'
        |       ELSE 'Concerning' END AS performance_category
        |FROM kpis""".stripMargin) { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
     import graft.ops.RelationalOps.dsum
     val policies = policiesSilver(s, d)
     val claims = claimsSilver(s, d)
@@ -1093,9 +1091,10 @@ object InsuranceGate extends QueryModule {
   // cuts the gate's durable-write cost 3× without weakening the
   // equivalence property (claims shard by their POLICY key, so the
   // join algebra is exactly the full mart's on the sharded tables; the
-  // full-feed durable cost is measured separately in the IvmSoak
-  // artifact). At sf0.1 the gate is job-count bound, not volume bound
-  // — the shard mainly protects the gate's cost at larger scales.
+  // full-feed durable cost is recorded in SCALE.md r16–r18 and
+  // BENCH_IVM_SOAK_r18.log). At sf0.1 the gate is job-count bound, not
+  // volume bound — the shard mainly protects the gate's cost at larger
+  // scales.
   register("q228_compacted_state_mart", oPolicyPerfIvmSqlWhere(
     "WHERE CAST(policy_id[2:] AS BIGINT) % 3 = 0",
     "WHERE TRY_CAST(policy_id[2:] AS BIGINT) % 3 = 0")) { (s, d) =>
@@ -2035,14 +2034,10 @@ object InsuranceGate extends QueryModule {
 
   import graft.streaming.{GoldMaintenanceStream, VersionedStateStore}
 
-  private def oracleOf(name: String): String = reg(name)._2.get
+  private def oracleOf(name: String): String = reg(name)._2
 
   private val ivmStateMemo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, String), VersionedStateStore]()
-
-  /** TEST/BENCH hook: drop the amortized 3-batch state layouts (a
-    * fresh-JVM cold start; the dirs themselves are TmpReaper-scoped). */
-  private[graft] def resetIvmStateMemoForTest(): Unit = ivmStateMemo.clear()
 
   /** Batches 1–3 folded into a durable store via the KEYED path —
     * built once per (session, dataset, mart), then read-only. */

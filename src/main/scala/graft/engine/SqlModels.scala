@@ -1,6 +1,5 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
 import scala.collection.mutable
 
 /** dbt-style authoring surface: models written as Spark SQL SELECTs with

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** Typed (case-class) views of the silver entities — `Dataset[T]` sugar
   * for users who want compile-time safety over the DataFrame pipeline

@@ -1734,7 +1734,6 @@ object SimilarityOps extends QueryModule {
     * packed = the M subspace codes at 8 bits each. */
   def annIndex(s: SparkSession, d: String)
       : (DataFrame, Seq[(Int, Seq[Double])]) = {
-    import org.apache.spark.sql.GraftColumnBridge
     val iso = annSession(s)
     val ident = s"$AnnCat.g.ivfpq_${embFingerprint(d)}"
     annLock.synchronized {

@@ -1,7 +1,6 @@
 package graft.multimodal
 
 import graft.ops.{QueryModule, Tables}
-import graft.text.PortableHash
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._

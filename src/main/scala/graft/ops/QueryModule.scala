@@ -3,21 +3,17 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Shared registry shape for query modules: each named query has a Spark
-  * implementation and (usually) a DuckDB oracle SQL twin. Queries without
-  * an oracle get the driver's weaker rows-only check.
+  * implementation and a DuckDB oracle SQL twin.
   */
 trait QueryModule {
   type Q = (SparkSession, String) => DataFrame
-  protected val reg: scala.collection.mutable.LinkedHashMap[String, (Q, Option[String])] =
+  protected val reg: scala.collection.mutable.LinkedHashMap[String, (Q, String)] =
     scala.collection.mutable.LinkedHashMap()
 
   protected def register(name: String, sql: String)(q: Q): Unit =
-    reg(name) = (q, Some(sql))
-
-  protected def registerNoOracle(name: String)(q: Q): Unit =
-    reg(name) = (q, None)
+    reg(name) = (q, sql)
 
   def queries: Map[String, Q] = reg.map { case (k, (q, _)) => k -> q }.toMap
   def oracles: Map[String, String] =
-    reg.collect { case (k, (_, Some(sql))) => k -> sql }.toMap
+    reg.map { case (k, (_, sql)) => k -> sql }.toMap
 }

@@ -56,14 +56,4 @@ object Sources {
   def writePartitioned(df: DataFrame, path: String,
       partitionCols: Seq[String]): Unit =
     df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-
-  /** Bucketed + sorted managed table (co-located joins on `bucketCol`:
-    * repeated gold joins skip their shuffle — see BucketedJoinSpec). */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-      buckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)
 }

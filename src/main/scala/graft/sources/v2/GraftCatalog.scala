@@ -311,8 +311,8 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
 
   private def writeMeta(
       ident: Identifier, schema: StructType, clusterBy: String,
-      sortBy: String, filePerKey: Boolean = false,
-      custom: Map[String, String] = Map.empty): Unit = {
+      sortBy: String, filePerKey: Boolean,
+      custom: Map[String, String]): Unit = {
     val m = new com.fasterxml.jackson.databind.ObjectMapper()
     val propsNode = m.createObjectNode()
     custom.toSeq.sortBy(_._1).foreach { case (k, v) => propsNode.put(k, v) }

@@ -28,7 +28,6 @@ final class VersionedStateStore(spark: SparkSession, stateDir: String,
     mergeSpecs: Map[String, IncrementalGold.MergeSpec] = Map.empty,
     compactEvery: Int = VersionedStateStore.DefaultCompactEvery,
     clusterSpecs: Map[String, VersionedStateStore.ClusterSpec] = Map.empty) {
-  import VersionedStateStore.ClusterSpec
   require(retain >= 1, s"retain must keep at least the newest version")
   clusterSpecs.foreach { case (t, cs) =>
     val ms = mergeSpecs.getOrElse(t, sys.error(
@@ -387,9 +386,10 @@ object VersionedStateStore {
   *     exactly the idempotent-sink contract exactly-once foreachBatch
   *     pipelines rely on (GoldStreamSpec pins the double-fold no-op).
   *
-  * Two marts stream today: the executive summary (q218's aggregate
-  * IVM) and the policy-performance mart (q221's join IVM) — same
-  * store, same commit discipline, different fold.
+  * All four gold marts stream: the executive summary (q218's aggregate
+  * IVM), policy performance (q221's join IVM), customer 360 (q223) and
+  * claims operations (q224) — same store, same commit discipline,
+  * different fold. [[foldAllMarts]] maintains all four from one topic.
   *
   * At scale the state tables are dimension/month-sized (see
   * IncrementalGold) — the parquet round-trip per batch is
@@ -413,15 +413,6 @@ object GoldMaintenanceStream {
           from_json(col("before"), schema).as("before"),
           from_json(col("after"), schema).as("after")))
 
-  private def execStore(spark: SparkSession, stateDir: String,
-      retain: Int): VersionedStateStore =
-    new VersionedStateStore(spark, stateDir, ExecTables, retain)
-
-  private def perfStore(spark: SparkSession, stateDir: String,
-      retain: Int): VersionedStateStore =
-    new VersionedStateStore(spark, stateDir, PerfTables, retain,
-      IncrementalGold.PerfSpecs)
-
   /** Highest committed state version under `stateDir`, if any.
     * Usable without an active SparkSession (driver-side tooling,
     * pre-session recovery probes — r16 advice): version discovery is
@@ -440,18 +431,18 @@ object GoldMaintenanceStream {
   def loadState(spark: SparkSession, stateDir: String,
       id: Long): IncrementalGold.ExecState = {
     IncrementalGold.ExecState.of(
-      execStore(spark, stateDir, VersionedStateStore.DefaultRetain).load(id))
-  }
-
-  def loadPerfState(spark: SparkSession, stateDir: String,
-      id: Long): IncrementalGold.PolicyPerfState = {
-    IncrementalGold.PolicyPerfState.of(
-      perfStore(spark, stateDir, VersionedStateStore.DefaultRetain).load(id))
+      execStoreD(spark, stateDir, VersionedStateStore.DefaultRetain).load(id))
   }
 
   // delta-capable stores (LSM mode needs the merge algebra at read
   // time); fact-adjacent probe tables are KEY-CLUSTERED on their
-  // dominant probe key (r17 verdict task 1)
+  // dominant probe key (r17 verdict task 1). The exec store holds no
+  // clustered table, and its streaming maintainer saves full copies,
+  // which never read the merge specs.
+  private[graft] def execStoreD(spark: SparkSession, stateDir: String,
+      retain: Int): VersionedStateStore =
+    new VersionedStateStore(spark, stateDir, ExecTables, retain,
+      IncrementalGold.ExecSpecs)
   private[graft] def perfStoreD(spark: SparkSession, stateDir: String,
       retain: Int): VersionedStateStore =
     new VersionedStateStore(spark, stateDir, PerfTables, retain,
@@ -542,11 +533,6 @@ object GoldMaintenanceStream {
     }
   }
 
-  private[graft] def execStoreD(spark: SparkSession, stateDir: String,
-      retain: Int): VersionedStateStore =
-    new VersionedStateStore(spark, stateDir, ExecTables, retain,
-      IncrementalGold.ExecSpecs)
-
   import VersionedStateStore.ClusterSpec
 
   /** Bucket count of the key-clustered state tables. A LAYOUT constant
@@ -592,12 +578,12 @@ object GoldMaintenanceStream {
   /** [[foldBatch]] over pre-parsed signed deltas (the shared-parse
     * topology, r17 verdict task 5). `signed` is by-name: it is only
     * evaluated when the batch actually folds. */
-  private[graft] def foldExecFrom(df: DataFrame,
+  private def foldExecFrom(df: DataFrame,
       signed: => (DataFrame, DataFrame), id: Long, stateDir: String,
-      retain: Int = VersionedStateStore.DefaultRetain): Option[DataFrame] = {
+      retain: Int): Option[DataFrame] = {
     val spark = df.sparkSession
     foldWith[IncrementalGold.ExecState](df, id,
-      execStore(spark, stateDir, retain),
+      execStoreD(spark, stateDir, retain),
       loadState(spark, stateDir, _),
       (prev, _) => {
         val (p, c) = signed
@@ -703,9 +689,9 @@ object GoldMaintenanceStream {
     foldPerfFrom(df, (signedOf(df, "policy", polSchema),
       signedOf(df, "claim", clSchema)), id, stateDir, retain)
 
-  private[graft] def foldPerfFrom(df: DataFrame,
+  private def foldPerfFrom(df: DataFrame,
       signed: => (DataFrame, DataFrame), id: Long, stateDir: String,
-      retain: Int = VersionedStateStore.DefaultRetain): Option[DataFrame] = {
+      retain: Int): Option[DataFrame] = {
     val spark = df.sparkSession
     def deltas = { val (p, c) = signed
       (IncrementalGold.narrowPpPol(p), IncrementalGold.narrowPpCl(c)) }
@@ -766,18 +752,6 @@ object GoldMaintenanceStream {
     Seq("custDim", "polMetrics", "polDates", "pc", "cpc", "cm")
   private[graft] val OpsTables = Seq("cl", "p", "c", "att", "adj")
 
-  def loadC360State(spark: SparkSession, stateDir: String,
-      id: Long): IncrementalGold.Customer360State = {
-    IncrementalGold.Customer360State.of(
-      c360StoreD(spark, stateDir, VersionedStateStore.DefaultRetain).load(id))
-  }
-
-  def loadOpsState(spark: SparkSession, stateDir: String,
-      id: Long): IncrementalGold.ClaimsOpsState = {
-    IncrementalGold.ClaimsOpsState.of(
-      opsStoreD(spark, stateDir, VersionedStateStore.DefaultRetain).load(id))
-  }
-
   /** [[foldBatch]]'s twin for the customer-360 mart (three entities on
     * the topic: customer attribute churn folds the dimension side) —
     * LSM mode. */
@@ -788,10 +762,9 @@ object GoldMaintenanceStream {
       signedOf(df, "policy", polSchema), signedOf(df, "claim", clSchema)),
       id, stateDir, retain)
 
-  private[graft] def foldC360From(df: DataFrame,
+  private def foldC360From(df: DataFrame,
       signed: => (DataFrame, DataFrame, DataFrame), id: Long,
-      stateDir: String,
-      retain: Int = VersionedStateStore.DefaultRetain): Option[DataFrame] = {
+      stateDir: String, retain: Int): Option[DataFrame] = {
     val spark = df.sparkSession
     def deltas = { val (cu, p, c) = signed
       (IncrementalGold.narrowC360Cust(cu),
@@ -816,10 +789,9 @@ object GoldMaintenanceStream {
       signedOf(df, "policy", polSchema), signedOf(df, "claim", clSchema)),
       id, stateDir, retain)
 
-  private[graft] def foldOpsFrom(df: DataFrame,
+  private def foldOpsFrom(df: DataFrame,
       signed: => (DataFrame, DataFrame, DataFrame), id: Long,
-      stateDir: String,
-      retain: Int = VersionedStateStore.DefaultRetain): Option[DataFrame] = {
+      stateDir: String, retain: Int): Option[DataFrame] = {
     val spark = df.sparkSession
     def deltas = { val (cu, p, c) = signed
       (IncrementalGold.narrowCoCust(cu),
@@ -835,26 +807,48 @@ object GoldMaintenanceStream {
   }
 
   /** THE production topology: ONE 3-entity CDC topic maintains ALL FOUR
-    * gold marts concurrently — each mart folds the same micro-batch
-    * into its own versioned state dir under `stateRoot` (exec/perf/
-    * c360/ops), each with its own _COMMIT + batch-id skip, so a crash
-    * between mart commits replays the batch and only the not-yet-
+    * gold marts. Each entity's signed delta is parsed ONCE per batch,
+    * projected to the union of the columns any maintainer reads and
+    * checkpointed (r17 verdict task 5), and the four folds share those
+    * immutable frames. The parse is lazy: it runs only when some mart
+    * folds, so an empty batch or a replay every mart already committed
+    * parses nothing.
+    *
+    * The four folds run concurrently through [[Parallel.inParallel]]:
+    * each is its own chain of Spark jobs, and the scheduler interleaves
+    * their stages over the shared cores (SCALE.md r18: faster than the
+    * serial fold at every batch size). A failing fold surfaces only
+    * after its siblings finished.
+    *
+    * Each mart folds into its own versioned state dir under `stateRoot`
+    * (exec/perf/c360/ops) with its own _COMMIT + batch-id skip, so a
+    * crash between mart commits replays the batch and only the not-yet-
     * committed marts fold it (per-mart exactly-once). Returns the
     * refreshed marts keyed by name. */
   def foldAllMarts(df: DataFrame, id: Long, custSchema: StructType,
       polSchema: StructType, clSchema: StructType, stateRoot: String,
       retain: Int = VersionedStateStore.DefaultRetain)
       : Map[String, DataFrame] = {
+    import graft.engine.InsuranceGate
+    def parsed(entity: String, schema: StructType,
+        cols: Seq[String]): DataFrame =
+      signedOf(df, entity, schema).select(cols.map(col): _*)
+        .localCheckpoint(true)
+    // thread-safe: the first fold to need an entity parses it, the
+    // others wait for and share that frame
+    lazy val cu = parsed("customer", custSchema, InsuranceGate.CustDeltaCols)
+    lazy val pol = parsed("policy", polSchema, InsuranceGate.PolDeltaCols)
+    lazy val cl = parsed("claim", clSchema, InsuranceGate.ClDeltaCols)
     def sub(n: String) = s"$stateRoot/$n"
-    Seq(
-      "exec" -> foldBatch(df, id, polSchema, clSchema, sub("exec"), retain),
-      "perf" -> foldPerfBatch(df, id, polSchema, clSchema, sub("perf"),
-        retain),
-      "c360" -> foldC360Batch(df, id, custSchema, polSchema, clSchema,
-        sub("c360"), retain),
-      "ops" -> foldOpsBatch(df, id, custSchema, polSchema, clSchema,
-        sub("ops"), retain)
-    ).collect { case (n, Some(m)) => n -> m }.toMap
+    val folds: Seq[(String, () => Option[DataFrame])] = Seq(
+      "exec" -> (() => foldExecFrom(df, (pol, cl), id, sub("exec"), retain)),
+      "perf" -> (() => foldPerfFrom(df, (pol, cl), id, sub("perf"), retain)),
+      "c360" -> (() => foldC360From(df, (cu, pol, cl), id, sub("c360"),
+        retain)),
+      "ops" -> (() => foldOpsFrom(df, (cu, pol, cl), id, sub("ops"),
+        retain)))
+    folds.map(_._1).zip(Parallel.inParallel(folds.map(_._2)))
+      .collect { case (n, Some(m)) => n -> m }.toMap
   }
 
   /** [[foldAllMarts]] over an AT-LEAST-ONCE seq-stamped feed (r17
@@ -922,46 +916,6 @@ object GoldMaintenanceStream {
 
   private val IngestTables =
     Seq("ledgerPolicy", "ledgerClaim", "ledgerCustomer")
-
-  /** [[foldAllMarts]] with ONE shared parse of the wire batch (r17
-    * verdict task 5): each entity's signed delta is parsed and
-    * materialized once — projected to the union of the columns any
-    * maintainer reads — instead of 4 maintainers × 3 entities JSON
-    * parses of the same batch. With `concurrent` the four folds run
-    * through [[Parallel.inParallel]], so a failing fold surfaces only
-    * after its siblings finished (each fold is its own chain of Spark
-    * jobs; the scheduler interleaves their stages over the shared cores) — the
-    * topology a multi-tenant maintainer service would run, measured
-    * against the serial fold in IvmSoak. Per-mart exactly-once
-    * commit discipline is unchanged: the folds share ONLY the
-    * immutable checkpointed delta frames. */
-  def foldAllMartsShared(df: DataFrame, id: Long, custSchema: StructType,
-      polSchema: StructType, clSchema: StructType, stateRoot: String,
-      retain: Int = VersionedStateStore.DefaultRetain,
-      concurrent: Boolean = false): Map[String, DataFrame] = {
-    if (df.isEmpty)
-      return foldAllMarts(df, id, custSchema, polSchema, clSchema,
-        stateRoot, retain)
-    import graft.engine.InsuranceGate
-    val cu = signedOf(df, "customer", custSchema)
-      .select(InsuranceGate.CustDeltaCols.map(col): _*).localCheckpoint(true)
-    val pol = signedOf(df, "policy", polSchema)
-      .select(InsuranceGate.PolDeltaCols.map(col): _*).localCheckpoint(true)
-    val cl = signedOf(df, "claim", clSchema)
-      .select(InsuranceGate.ClDeltaCols.map(col): _*).localCheckpoint(true)
-    def sub(n: String) = s"$stateRoot/$n"
-    val folds: Seq[(String, () => Option[DataFrame])] = Seq(
-      "exec" -> (() => foldExecFrom(df, (pol, cl), id, sub("exec"), retain)),
-      "perf" -> (() => foldPerfFrom(df, (pol, cl), id, sub("perf"), retain)),
-      "c360" -> (() => foldC360From(df, (cu, pol, cl), id, sub("c360"),
-        retain)),
-      "ops" -> (() => foldOpsFrom(df, (cu, pol, cl), id, sub("ops"),
-        retain)))
-    val results: Seq[Option[DataFrame]] =
-      if (!concurrent) folds.map(_._2())
-      else Parallel.inParallel(folds.map(_._2))
-    folds.map(_._1).zip(results).collect { case (n, Some(m)) => n -> m }.toMap
-  }
 
   /** Wire the four-mart maintainer to an at-least-once seq-stamped CDC
     * stream — [[startAllMarts]] with the ingest ledger in front. */

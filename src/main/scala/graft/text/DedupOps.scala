@@ -36,11 +36,6 @@ object DedupOps extends QueryModule {
       sequence(lit(1), greatest(size(t) - 2, lit(0))),
       i => concat_ws(" ", slice(t, i, lit(3)))))
   }
-  /** DuckDB spelling of [[shingles]]. */
-  val oShingles: String =
-    s"""list_distinct(list_transform(
-       |    range(1, greatest(len($oTokens) - 2, 0) + 1),
-       |    i -> array_to_string(($oTokens)[i:i+2], ' ')))""".stripMargin
 
   /** MinHash prime modulus (2^31 - 1): keeps the affine products inside
     * int64 in both engines. */

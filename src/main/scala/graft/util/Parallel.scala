@@ -29,11 +29,16 @@ object Parallel {
     * order) is rethrown, unwrapped: fail-fast would leave sibling Spark
     * writes running detached while the caller retries into the same
     * directory or starts dependent work. The guarantee holds per call;
-    * an inner call rethrows once ITS tasks are done.
+    * an inner call rethrows once ITS tasks are done. It holds against
+    * an interrupt too: an interrupted caller still waits for every
+    * task, then restores its interrupt flag and rethrows the
+    * InterruptedException.
     *
     * Spark's thread-local properties (job groups, descriptions) reach a
-    * pooled thread only at its creation: do not combine inParallel with
-    * setJobGroup-based cancellation. Nothing in the engine does. */
+    * pooled thread only at its creation, so job-group cancellation does
+    * not reach the tasks. `StreamingQuery.stop()` is such a case: it
+    * interrupts the stream thread and cancels the query's job group,
+    * and the four-mart fold's tasks run their jobs to the end. */
   def inParallel[A](tasks: Seq[() => A],
       maxConcurrent: Int = Int.MaxValue): Seq[A] = {
     require(maxConcurrent >= 1, s"maxConcurrent must be >= 1, got $maxConcurrent")
@@ -43,8 +48,18 @@ object Parallel {
       val futs = tasks.map(t => pool.submit(new Callable[A] {
         def call(): A = { gate.acquire(); try t() finally gate.release() }
       }))
-      // in-order get() on every future = a barrier over ALL tasks
-      val results = futs.map(f => scala.util.Try(f.get()))
+      // in-order get() on every future = a barrier over ALL tasks, kept
+      // through interrupts (Try does not catch InterruptedException)
+      var interrupt: Option[InterruptedException] = None
+      val results = futs.map { f =>
+        var r: Option[scala.util.Try[A]] = None
+        while (r.isEmpty)
+          try r = Some(scala.util.Try(f.get()))
+          catch { case ie: InterruptedException =>
+            if (interrupt.isEmpty) interrupt = Some(ie) }
+        r.get
+      }
+      interrupt.foreach { ie => Thread.currentThread().interrupt(); throw ie }
       results.collectFirst { case scala.util.Failure(e) =>
         throw (e match {
           case ee: ExecutionException if ee.getCause != null => ee.getCause

@@ -137,8 +137,8 @@ class DagConcurrencySpec extends SparkSpec {
         assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job never seen")
         r
       } finally spark.sparkContext.removeSparkListener(listener)
-      // the 12 writes (each with its AQE stage jobs) plus the raw-source
-      // counts; one re-count per model would add at least 12 jobs
+      // only the 12 writes, each with its AQE stage jobs; counting the
+      // raw inputs added 8 jobs, re-counting every model at least 12
       assert(jobs.get() <= DagConcurrencySpec.TableRunJobs,
         s"a Sink.Table pipeline run took ${jobs.get()} jobs, bound " +
           s"${DagConcurrencySpec.TableRunJobs}: an audit re-count is back")
@@ -150,6 +150,7 @@ class DagConcurrencySpec extends SparkSpec {
 
 object DagConcurrencySpec {
   /** Spark jobs of one 12-model `Sink.Table` run over `Fixtures`, as
-    * measured: 44 (84 when the audit re-counted every model). */
-  val TableRunJobs = 44
+    * measured: 36 (44 when a job counted each raw input, 84 when the
+    * audit re-counted every model). */
+  val TableRunJobs = 36
 }

@@ -37,6 +37,27 @@ class EdgeCaseSpec extends SparkSpec {
     }
   }
 
+  test("bronze recovers file metadata through the Dag's observed input") {
+    // Dag wraps each raw input in an Observation before bronze reads it;
+    // the hidden _metadata struct must still resolve through it
+    val dir = java.nio.file.Files.createTempDirectory("graft-meta-dag").toString
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$dir/customers.csv"),
+      "customer_id,first_name,last_name\nC1,a,b\nC2,c,d\n")
+    val raw = spark.read.option("header", "true").csv(dir)
+    val bronze = InsurancePipeline.models(Fixtures.clock)
+      .filter(_.name == "customers_bronze")
+    val (out, audit) = new Dag(bronze, Sink.Cached(), Fixtures.clock)
+      .run(Map("raw_customers" -> raw))
+    val paths = out("customers_bronze").select("source_file_path")
+      .collect().map(_.getString(0))
+    assert(paths.length === 2)
+    paths.foreach(p => assert(p != null && p.endsWith("customers.csv"), p))
+    // the raw count came from the observation: source == target == 2
+    val row = audit.collect().head
+    assert((row.getLong(3), row.getLong(4)) === ((2L, 2L)))
+  }
+
   test("silver handles empty inputs without failing") {
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.customers)

@@ -356,9 +356,10 @@ class GoldStreamSpec extends SparkSpec {
   }
 
 
-  test("foldAllMartsShared (one parse, CONCURRENT folds) equals the " +
-      "four batch gates — per-mart commits are thread-independent") {
-    import spark.implicits._
+  test("foldAllMarts (one parse, CONCURRENT folds) equals the four " +
+      "batch gates; a partial-commit replay folds only the uncommitted " +
+      "marts") {
+    import scala.jdk.CollectionConverters._
     val pc = graft.engine.InsuranceGate.cdcBatches(spark, sf)
     val cu = graft.engine.InsuranceGate.cdcCustomerBatches(spark, sf)
     val polT = pc.head._1.schema("before").dataType.asInstanceOf[StructType]
@@ -366,16 +367,47 @@ class GoldStreamSpec extends SparkSpec {
     val cuT = cu.head.schema("before").dataType.asInstanceOf[StructType]
     val stateRoot =
       java.nio.file.Files.createTempDirectory("shared_state").toString
+    def sub(n: String) = s"$stateRoot/$n"
     def topic(i: Int): DataFrame =
       cdcJson(pc(i)._1, pc(i)._2).unionByName(
         cu(i).select(lit("customer").as("entity"), col("op"),
           to_json(col("before")).as("before"),
           to_json(col("after")).as("after")))
+    // (path, mtime) of every file of one mart's version: a re-fold
+    // rewrites the parquet parts under fresh names and the _COMMIT
+    def files(mart: String, v: Long): Set[(String, Long)] = {
+      val root = java.nio.file.Paths.get(sub(mart), v.toString)
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => root.relativize(f).toString ->
+          java.nio.file.Files.getLastModifiedTime(f).toMillis).toSet
+      finally walk.close()
+    }
+    def foldAll(batch: DataFrame, i: Int): Map[String, DataFrame] =
+      GoldMaintenanceStream.foldAllMarts(batch, i.toLong, cuT, polT, clT,
+        stateRoot)
     var marts: Map[String, DataFrame] = Map.empty
     (0 until 4).foreach { i =>
-      marts = GoldMaintenanceStream.foldAllMartsShared(
-        topic(i).localCheckpoint(true), i.toLong, cuT, polT, clT,
-        stateRoot, concurrent = true)
+      val batch = topic(i).localCheckpoint(true)
+      if (i != 2) marts = foldAll(batch, i)
+      else {
+        // a crash after exec and c360 committed batch 2 alone: the
+        // replay must skip those two and fold only perf and ops
+        GoldMaintenanceStream.foldBatch(batch, 2L, polT, clT, sub("exec"))
+        GoldMaintenanceStream.foldC360Batch(batch, 2L, cuT, polT, clT,
+          sub("c360"))
+        val committed = Seq("exec", "c360").map(m => m -> files(m, 2L)).toMap
+        Seq("perf", "ops").foreach(m =>
+          assert(GoldMaintenanceStream.lastCommitted(sub(m)) === Some(1L)))
+        marts = foldAll(batch, i)
+        assert(marts.keySet === Set("exec", "perf", "c360", "ops"))
+        committed.foreach { case (m, fs) =>
+          assert(files(m, 2L) === fs, s"$m re-folded its committed batch 2")
+        }
+        Seq("perf", "ops").foreach(m =>
+          assert(GoldMaintenanceStream.lastCommitted(sub(m)) === Some(2L),
+            s"$m did not fold the replayed batch 2"))
+      }
     }
     val gates = Map(
       "exec" -> "q218_incremental_gold",

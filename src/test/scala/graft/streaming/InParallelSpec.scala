@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 import java.util.concurrent.CountDownLatch
 
 import graft.util.Parallel
@@ -53,6 +53,31 @@ class InParallelSpec extends AnyFunSuite {
     assert(e.getMessage === "task-1 boom") // unwrapped, not ExecutionException
     assert(stillRunning.get() === 0,
       "inParallel rethrew while a sibling task was still running")
+  }
+
+  test("an interrupted caller waits for every task, then rethrows") {
+    // a stopped streaming query interrupts its thread while the
+    // four-mart fold's tasks are mid-write: they must not be left
+    // running detached
+    val started = new CountDownLatch(2)
+    val finished = new AtomicBoolean(false)
+    @volatile var finishedAtThrow: Option[Boolean] = None
+    @volatile var flagRestored = false
+    val caller = new Thread(() =>
+      try Parallel.inParallel(Seq(
+        () => { started.countDown(); Thread.sleep(300); finished.set(true) },
+        () => started.countDown()))
+      catch { case _: InterruptedException =>
+        finishedAtThrow = Some(finished.get())
+        flagRestored = Thread.currentThread().isInterrupted
+      })
+    caller.start()
+    started.await()
+    caller.interrupt()
+    caller.join(10000)
+    assert(finishedAtThrow === Some(true),
+      "inParallel threw on interrupt while a task was still running")
+    assert(flagRestored, "the caller's interrupt flag was swallowed")
   }
 
   test("results preserve task order") {
