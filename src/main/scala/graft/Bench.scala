@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -94,35 +92,20 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // DSv2 storage-partitioned joins (KeyGroupedPartitioning zip) —
-      // set at session build so q161 never mutates the shared session
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // optional subset (comma-separated names) for targeted measurements,
+    // checked before the session starts; a blank list means the full suite
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").filter(_.trim.nonEmpty)
+      .map(SparkEntry.queryNames(_).toSet)
+    val spark = GraftSession(GraftSession.cpus(GraftSession.allCores))
     // ambient load BEFORE any work: the end-of-run figure includes the
     // bench's own local[32] load (r6's 4.15 was self-inflicted); this is
     // the number that says whether the box was otherwise idle
     val loadStart = loadavg()
-    // config-bisect hook: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" overrides
-    // session confs for A/B measurements without code edits
-    // NOTE: q161 plans on an isolated child session and does not see
-    // these runtime overrides (newSession inherits builder confs only)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty => spark.conf.set(k.trim, v.trim)
-        case _ if kv.trim.isEmpty => ()
-        case _ => sys.error(s"SPARK_GRAFT_EXTRA_CONF: expected k=v, got '$kv'")
-      }
-    })
+    GraftSession.applyExtraConf(spark)
+    // the effective parallelism, read from the session the suite runs in
+    val cpus = spark.sparkContext.defaultParallelism
+    val master = spark.sparkContext.master
 
     // warmup: exercise the parquet reader, codegen, and the decimal
     // aggregation path once so JIT/init isn't charged to the first query
@@ -132,9 +115,6 @@ object Bench {
       .selectExpr("sum(cast(r_regionkey as decimal(18,4))) as s")
       .write.format("noop").mode("overwrite").save()
 
-    // optional subset (comma-separated names) for targeted measurements
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     val fns = names.toMap
@@ -157,7 +137,7 @@ object Bench {
     // the numbers were taken on a noisy box (±15% cron spikes, NOTES.md)
     val load = loadavg()
     val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failed,"ambient_cores":$amb,"sf":"$sfDir","reps":$reps,"load":$load,"load_start":$loadStart}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failed,"ambient_cores":$amb,"sf":"$sfDir","reps":$reps,"cpus":$cpus,"master":"$master","load":$load,"load_start":$loadStart}"""
     println(json)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_FILE", "BENCH_LAST.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json + "\n")
@@ -173,7 +153,7 @@ object Bench {
     // BENCH_LAST.json; this line carries the headline total and points
     // at the file.
     val compact =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${names.size},"n_failed":${t.failed.size},"sf":"$sfDir","reps":$reps,"load":$load,"load_start":$loadStart,"queries_file":"$outFile"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${names.size},"n_failed":${t.failed.size},"sf":"$sfDir","reps":$reps,"cpus":$cpus,"master":"$master","load":$load,"load_start":$loadStart,"queries_file":"$outFile"}"""
     println(compact)
     System.out.flush()
   }

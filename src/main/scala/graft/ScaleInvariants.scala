@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Engine-only scale gate for the heavy graph/similarity family at soak
@@ -41,17 +41,7 @@ object ScaleInvariants {
     val soakDir = args.headOption.getOrElse("/tmp/soak50")
     val baseDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val k = if (args.length > 2) args(2).toInt else 50
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpus(GraftSession.allCores))
 
     val times = scala.collection.mutable.LinkedHashMap[String, Double]()
     var failures = 0

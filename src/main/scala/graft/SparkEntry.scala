@@ -26,6 +26,19 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     modules.flatMap(_.queries).toMap
 
+  /** The query names in a comma-separated `list`, trimmed and in order.
+    * Throws, naming each one, if any is not a key of [[queries]] (a
+    * misspelled name must not silently run fewer queries), or if the list
+    * names none. */
+  def queryNames(list: String): Seq[String] = {
+    val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    require(names.nonEmpty, s"no query name in '$list'")
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.mkString(", ")}")
+    names
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** A/B harness for the r17-verdict "dictionary-aware decode" question:
@@ -27,16 +27,7 @@ object StringScanAb {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/soak")
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpus(32))
 
     def timed[A](body: => A): (A, Double) = {
       val t0 = System.nanoTime()

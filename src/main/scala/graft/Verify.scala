@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,23 +7,12 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query-name filter (iteration aid);
     // a blank arg means "no filter" — an empty shell expansion must not
-    // silently select zero queries and fake a green full run
+    // silently select zero queries and fake a green full run. Names are
+    // checked before the session starts.
     val only: Option[Set[String]] =
       if (args.length > 2 && args(2).trim.nonEmpty)
-        Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // DSv2 storage-partitioned joins (KeyGroupedPartitioning zip) —
-      // set at session build so q161 never mutates the shared session
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // events.parquet carries TIMESTAMP(NANOS); Tables.events converts
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+        Some(SparkEntry.queryNames(args(2)).toSet) else None
+    val spark = GraftSession(GraftSession.cpus(4))
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.ListBuffer[String]()
     SparkEntry.queries

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** CLI entry point: run the full insurance medallion pipeline over raw CSVs.
   *
@@ -16,14 +16,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object RunPipeline {
   def main(args: Array[String]): Unit = {
     val Array(rawDir, outDir) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft-insurance-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_MASTER is the deployment's cluster, when there is one
+    val spark = graft.GraftSession(graft.GraftSession.cpus(4),
+      sys.env.get("SPARK_MASTER"))
 
     def readCsv(name: String): DataFrame =
       spark.read.option("header", "true").csv(s"$rawDir/$name.csv")

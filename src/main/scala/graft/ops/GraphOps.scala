@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
@@ -41,8 +41,8 @@ object GraphOps extends QueryModule {
     * Large inputs are cached per-JVM in a write-once edge layout
     * content-addressed by plan + scanned-file sizes/mtimes
     * ([[edgeFrameFingerprint]]): mutating files byte-same-size with a
-    * preserved mtime under an identical plan can serve stale edges —
-    * set `SPARK_GRAFT_EDGE_ETL=always` in that regime. Applies to
+    * preserved mtime under an identical plan can serve stale edges, so
+    * inputs rewritten in place must change size or mtime. Applies to
     * [[pageRank]], [[bfs]] and [[kCore]] equally.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
@@ -814,19 +814,15 @@ object GraphOps extends QueryModule {
   //
   // Semantics = q190 with a denser seed (every ~53rd customer): fixed
   // [[BfsMaxHops]] rounds, per-level dedup, unreached nodes absent.
+  //
+  // Q201Buckets is the bucket count of every edge layout. A power-law
+  // graph puts a hub's whole edge list in one bucket; with buckets ==
+  // cores the hub task IS the round's wall clock, while buckets ≫ cores
+  // lets the scheduler pack small buckets around the hub (measured at
+  // the Zipf-1.2 soak, SCALE.md round 14). Correctness and the
+  // zero-exchange property do not depend on the count.
   val Q201Buckets = 32
   val Q201SeedMod = 53L
-
-  /** Effective bucket count for the edge layouts —
-    * `SPARK_GRAFT_EDGE_BUCKETS` overrides the [[Q201Buckets]] default.
-    * A power-law graph puts a hub's whole edge list in one bucket; with
-    * buckets == cores the hub task IS the round's wall clock (zero
-    * scheduling slack), while buckets ≫ cores lets the scheduler pack
-    * small buckets around the hub (measured at the Zipf-1.2 soak — see
-    * SCALE.md round 14). Correctness and the zero-exchange property are
-    * bucket-count-independent; the knob is physical only. */
-  def edgeBuckets: Int =
-    sys.env.get("SPARK_GRAFT_EDGE_BUCKETS").map(_.toInt).getOrElse(Q201Buckets)
 
   /** In-JVM registry of bucketed edge tables already written this JVM
     * (table name → kept so the content-addressed skip below is a pure
@@ -841,13 +837,45 @@ object GraphOps extends QueryModule {
   private def trackEdgeDir(path: String): Unit =
     graft.util.TmpReaper.track(path)
 
-  /** True when `SPARK_GRAFT_EDGE_ETL=always` pins the old
-    * rewrite-per-call behavior — the knob that keeps the
-    * self-contained-cost framing measurable (bench A/Bs) while the
-    * DEFAULT is the production shape: the warehouse writes an edge
-    * layout once and runs many traversals against it. */
-  private def edgeEtlAlways: Boolean =
-    sys.env.get("SPARK_GRAFT_EDGE_ETL").contains("always")
+  /** Write-once within this JVM for the native bucketBy layouts: the
+    * table `tbl` this JVM already wrote, else the one `write` makes. */
+  private def writeOnce(s: SparkSession, tbl: String)(
+      write: => DataFrame): DataFrame = edgeEtlLock.synchronized {
+    if (writtenEdgeTables.contains(tbl) && s.catalog.tableExists(tbl))
+      s.table(tbl)
+    else { val out = write; writtenEdgeTables.add(tbl); out }
+  }
+
+  /** Write-once for the edge tables on the engine's own sink. The first
+    * call in this JVM adopts a complete persisted `ident` (a durable
+    * warehouse surviving a restart; adopt drops a partial one a dead
+    * writer left), or creates the empty filePerKey table with columns
+    * `cols` plus `bucket`, runs `append` to fill it and marks it
+    * complete. Later calls are a pure catalog probe. */
+  private def adoptOrBuild(iso: SparkSession, ident: String, cols: String)(
+      append: => Unit): DataFrame = {
+    edgeEtlLock.synchronized {
+      if (!writtenEdgeTables.contains(ident)) {
+        if (graft.engine.Warehouse.adopt(iso, ident,
+            Seq(graft.engine.Warehouse.CompleteProp)).isEmpty) {
+          iso.sql(s"CREATE NAMESPACE IF NOT EXISTS $GraftEdgeCat.g")
+          iso.sql(s"DROP TABLE IF EXISTS $ident")
+          iso.sql(s"CREATE TABLE $ident ($cols, bucket BIGINT) " +
+            "PARTITIONED BY (bucket) " +
+            "TBLPROPERTIES ('filePerKey'='true', 'sortBy'='src')")
+          append
+          graft.engine.Warehouse.markComplete(iso, ident)
+        }
+        writtenEdgeTables.add(ident)
+      }
+    }
+    iso.table(ident)
+  }
+
+  /** The storage bucket of an edge or probe row:
+    * pmod(src, [[Q201Buckets]]). */
+  private def bucketOfSrc: Column =
+    pmod(col("src"), lit(Q201Buckets.toLong)).cast(LongType)
 
   /** Content address of a dataset's edge inputs: name, size, and mtime
     * of every orders/lineitem parquet part under `d`. Same content →
@@ -862,26 +890,26 @@ object GraphOps extends QueryModule {
         Option(f.listFiles()).map(_.toSeq.sortBy(_.getName)).getOrElse(Seq(f))
       else Seq(f)
     }
-    // the bucket count participates in the address: tables laid out
-    // under different SPARK_GRAFT_EDGE_BUCKETS must never alias
-    val sig = d + "|b" + edgeBuckets + "|" + files.map(f =>
+    // the bucket count stays in the address: a durable warehouse adopts
+    // the edge tables it already holds by this name
+    val sig = d + "|b" + Q201Buckets + "|" + files.map(f =>
       s"${f.getName}:${f.length}:${f.lastModified}").mkString("|")
     java.security.MessageDigest.getInstance("MD5")
       .digest(sig.getBytes("UTF-8")).take(6).map(b => f"$b%02x").mkString
   }
 
-  /** Shared bucketed-table writer: (re)writes `edges` (src, dst) as a
-    * bucketed, bucket-sorted parquet table and returns the catalog-read
+  /** Shared bucketed-table writer: (re)writes `edges` as a parquet table
+    * bucketed and bucket-sorted on `key` and returns the catalog-read
     * frame whose scan carries the bucket partitioning. */
   private def writeBucketedEdges(s: SparkSession, tbl: String,
-      edges: DataFrame): DataFrame = {
+      edges: DataFrame, key: String = "src"): DataFrame = {
     // repartition by the bucket expression first: each write task then
     // emits exactly one file per bucket instead of numBuckets small
     // files per task (the classic bucketBy write blow-up)
     s.sql(s"DROP TABLE IF EXISTS $tbl")
-    edges.repartition(edgeBuckets, col("src"))
+    edges.repartition(Q201Buckets, col(key))
       .write.format("parquet")
-      .bucketBy(edgeBuckets, "src").sortBy("src")
+      .bucketBy(Q201Buckets, key).sortBy(key)
       .option("path",
         s"${graft.engine.Warehouse.assetDir("edges_native")}/$tbl")
       .mode("overwrite")
@@ -904,24 +932,13 @@ object GraphOps extends QueryModule {
     * ETL; every later call (q201 BFS, q209 k-core, q210 PageRank, q213
     * components — and every bench rep) gets the table back as a pure
     * catalog probe, which is the production cost model: edges are laid
-    * out once and amortized over every traversal.
-    * `SPARK_GRAFT_EDGE_ETL=always` restores rewrite-per-call for
-    * self-contained measurements. Directories are reaped by a JVM
-    * shutdown hook (r13 ADVICE / verdict task 7).
+    * out once and amortized over every traversal. Directories are
+    * reaped by a JVM shutdown hook (r13 ADVICE / verdict task 7).
     */
   def bucketedEdgeTable(s: SparkSession, d: String): DataFrame = {
     val tbl = s"graft_edges_${datasetFingerprint(d)}" +
       s"_p${ProcessHandle.current().pid()}"
-    edgeEtlLock.synchronized {
-      if (!edgeEtlAlways && writtenEdgeTables.contains(tbl) &&
-          s.catalog.tableExists(tbl)) {
-        s.table(tbl)
-      } else {
-        val out = writeBucketedEdges(s, tbl, tradeEdgesPlan(s, d))
-        writtenEdgeTables.add(tbl)
-        out
-      }
-    }
+    writeOnce(s, tbl)(writeBucketedEdges(s, tbl, tradeEdgesPlan(s, d)))
   }
 
   /** The symmetrized trade-graph edge plan (orders⋈lineitem →
@@ -989,37 +1006,17 @@ object GraphOps extends QueryModule {
     * bucket = pmod(src, [[Q201Buckets]]). Segments are parquet, the
     * sink's only payload; a table left in a durable warehouse by the
     * deleted JSON-lines payload under the same name fails to load, so
-    * adopt skips it and the build below drops and rebuilds it. */
+    * adopt skips it and [[adoptOrBuild]] drops and rebuilds it. */
   def graftEdgeTable(s: SparkSession, d: String): DataFrame = {
     val iso = graftEdgeSession(s)
     val ident = s"$GraftEdgeCat.g.edges_${datasetFingerprint(d)}"
-    edgeEtlLock.synchronized {
-      if (edgeEtlAlways || !writtenEdgeTables.contains(ident)) {
-        // cross-JVM adopt first (durable warehouse surviving a restart):
-        // a complete persisted layout for this content address is served
-        // as a pure catalog probe; a partial one (writer died mid-build)
-        // is dropped by adopt and rebuilt below
-        val adopted = !edgeEtlAlways && graft.engine.Warehouse
-          .adopt(iso, ident, Seq(graft.engine.Warehouse.CompleteProp))
-          .isDefined
-        if (!adopted) {
-          iso.sql(s"CREATE NAMESPACE IF NOT EXISTS $GraftEdgeCat.g")
-          iso.sql(s"DROP TABLE IF EXISTS $ident")
-          iso.sql(s"CREATE TABLE $ident " +
-            "(src BIGINT, dst BIGINT, bucket BIGINT) PARTITIONED BY (bucket) " +
-            "TBLPROPERTIES ('filePerKey'='true', 'sortBy'='src')")
-          tradeEdgesPlan(iso, d)
-            .select(col("src").cast(LongType).as("src"),
-              col("dst").cast(LongType).as("dst"))
-            .withColumn("bucket",
-              pmod(col("src"), lit(edgeBuckets.toLong)).cast(LongType))
-            .writeTo(ident).append()
-          graft.engine.Warehouse.markComplete(iso, ident)
-        }
-        writtenEdgeTables.add(ident)
-      }
+    adoptOrBuild(iso, ident, "src BIGINT, dst BIGINT") {
+      tradeEdgesPlan(iso, d)
+        .select(col("src").cast(LongType).as("src"),
+          col("dst").cast(LongType).as("dst"))
+        .withColumn("bucket", bucketOfSrc)
+        .writeTo(ident).append()
     }
-    iso.table(ident)
   }
 
   /** Attach the storage bucket id to a node-keyed probe frame when the
@@ -1038,9 +1035,7 @@ object GraphOps extends QueryModule {
         .drop("__salt"),
         Seq("src_salt"))
     } else if (be.columns.contains("bucket"))
-      (f.withColumn("bucket",
-        pmod(col("src"), lit(edgeBuckets.toLong)).cast(LongType)),
-        Seq("bucket", "src"))
+      (f.withColumn("bucket", bucketOfSrc), Seq("bucket", "src"))
     else (f, Seq("src"))
 
   // ===================== SALTED bucket layout for SUPERNODE graphs
@@ -1054,7 +1049,7 @@ object GraphOps extends QueryModule {
   //
   //   src_salt = src * F + pmod(hash(dst), F)
   //
-  // written bucketBy(edgeBuckets, src_salt), so the hub's edges spread
+  // written bucketBy(Q201Buckets, src_salt), so the hub's edges spread
   // over F buckets/tasks. Probes compensate by REPLICATING the
   // node-sized frame F× (ops/Salting's replication side, composed into
   // storage): each probe row fans to (src, salt = 0..F−1) and joins on
@@ -1084,16 +1079,7 @@ object GraphOps extends QueryModule {
       factor: Int = SaltedEdgeFactor): DataFrame = {
     val tbl = s"graft_edges_${datasetFingerprint(d)}_s$factor" +
       s"_p${ProcessHandle.current().pid()}"
-    edgeEtlLock.synchronized {
-      if (!edgeEtlAlways && writtenEdgeTables.contains(tbl) &&
-          s.catalog.tableExists(tbl)) {
-        s.table(tbl)
-      } else {
-        val out = writeSaltedEdges(s, tbl, tradeEdgesPlan(s, d), factor)
-        writtenEdgeTables.add(tbl)
-        out
-      }
-    }
+    writeOnce(s, tbl)(writeSaltedEdges(s, tbl, tradeEdgesPlan(s, d), factor))
   }
 
   /** True when the frame's `src` column is an integral type — the only
@@ -1108,7 +1094,7 @@ object GraphOps extends QueryModule {
       case _ => false
     }
 
-  /** Shared salted-table writer (the [[writeBucketedEdges]] twin). */
+  /** Shared salted-table writer: [[writeBucketedEdges]] on src_salt. */
   private def writeSaltedEdges(s: SparkSession, tbl: String,
       edgesIn: DataFrame, factor: Int): DataFrame = {
     require(hasIntegralSrc(edgesIn),
@@ -1123,17 +1109,7 @@ object GraphOps extends QueryModule {
         (col("src") * factor + pmod(hash(col("dst")), lit(factor)))
           .cast(LongType).as("src_salt", md),
         col("src"), col("dst"))
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    edges.repartition(edgeBuckets, col("src_salt"))
-      .write.format("parquet")
-      .bucketBy(edgeBuckets, "src_salt").sortBy("src_salt")
-      .option("path",
-        s"${graft.engine.Warehouse.assetDir("edges_native")}/$tbl")
-      .mode("overwrite")
-      .saveAsTable(tbl)
-    trackEdgeDir(
-      s"${graft.engine.Warehouse.assetDir("edges_native")}/$tbl")
-    s.table(tbl)
+    writeBucketedEdges(s, tbl, edges, "src_salt")
   }
 
   /** SALTED bucketed storage for an ARBITRARY (src, dst) edge frame —
@@ -1144,18 +1120,9 @@ object GraphOps extends QueryModule {
       : DataFrame = {
     val s = edges.sparkSession
     val tbl = s"graft_edges_g${edgeFrameFingerprint(edges)}" +
-      s"_s${factor}_b$edgeBuckets" + s"_p${ProcessHandle.current().pid()}"
-    edgeEtlLock.synchronized {
-      if (!edgeEtlAlways && writtenEdgeTables.contains(tbl) &&
-          s.catalog.tableExists(tbl)) {
-        s.table(tbl)
-      } else {
-        val out = writeSaltedEdges(s, tbl,
-          edges.select(col("src"), col("dst")), factor)
-        writtenEdgeTables.add(tbl)
-        out
-      }
-    }
+      s"_s${factor}_b$Q201Buckets" + s"_p${ProcessHandle.current().pid()}"
+    writeOnce(s, tbl)(
+      writeSaltedEdges(s, tbl, edges.select(col("src"), col("dst")), factor))
   }
 
   private def saltFactorOf(be: DataFrame): Int = {
@@ -1197,9 +1164,7 @@ object GraphOps extends QueryModule {
     * pipelines) writes once per JVM, while files regenerated in place
     * under an identical plan change the address and force a fresh ETL.
     * The only unaddressed staleness window is a file mutated
-    * byte-for-byte-same-size with a preserved mtime —
-    * `SPARK_GRAFT_EDGE_ETL=always` restores rewrite-per-call for
-    * callers in that regime. */
+    * byte-for-byte-same-size with a preserved mtime. */
   def bucketEdges(edges: DataFrame): DataFrame = {
     // DEFAULT backend (r15 verdict task 1): the engine's OWN storage —
     // a GraftCatalog/ClusteredSink parquet table, filePerKey + sorted,
@@ -1220,39 +1185,22 @@ object GraphOps extends QueryModule {
     if (srcT.isEmpty || dstT.isEmpty) return bucketEdgesNative(edges)
     val iso = graftEdgeSession(edges.sparkSession)
     val fp = edgeFrameFingerprint(edges)
-    val ident = s"$GraftEdgeCat.g.edges_g${fp}_b$edgeBuckets"
-    edgeEtlLock.synchronized {
-      if (edgeEtlAlways || !writtenEdgeTables.contains(ident)) {
-        val adopted = !edgeEtlAlways && graft.engine.Warehouse
-          .adopt(iso, ident, Seq(graft.engine.Warehouse.CompleteProp))
-          .isDefined
-        if (!adopted) {
-          iso.sql(s"CREATE NAMESPACE IF NOT EXISTS $GraftEdgeCat.g")
-          iso.sql(s"DROP TABLE IF EXISTS $ident")
-          iso.sql(s"CREATE TABLE $ident " +
-            s"(src ${srcT.get}, dst ${dstT.get}, bucket BIGINT) " +
-            "PARTITIONED BY (bucket) " +
-            "TBLPROPERTIES ('filePerKey'='true', 'sortBy'='src')")
-          // writeTo resolves its identifier against the FRAME's session,
-          // where the edge catalog isn't registered — bridge the caller's
-          // frame into the iso session through a global temp view
-          val view = s"graft_edges_stage_$fp"
-          edges.select(col("src"), col("dst"))
-            .createOrReplaceGlobalTempView(view)
-          try {
-            iso.table(s"global_temp.$view")
-              .withColumn("bucket",
-                pmod(col("src"), lit(edgeBuckets.toLong)).cast(LongType))
-              .writeTo(ident).append()
-          } finally {
-            edges.sparkSession.catalog.dropGlobalTempView(view)
-          }
-          graft.engine.Warehouse.markComplete(iso, ident)
-        }
-        writtenEdgeTables.add(ident)
+    val ident = s"$GraftEdgeCat.g.edges_g${fp}_b$Q201Buckets"
+    adoptOrBuild(iso, ident, s"src ${srcT.get}, dst ${dstT.get}") {
+      // writeTo resolves its identifier against the FRAME's session,
+      // where the edge catalog isn't registered — bridge the caller's
+      // frame into the iso session through a global temp view
+      val view = s"graft_edges_stage_$fp"
+      edges.select(col("src"), col("dst"))
+        .createOrReplaceGlobalTempView(view)
+      try {
+        iso.table(s"global_temp.$view")
+          .withColumn("bucket", bucketOfSrc)
+          .writeTo(ident).append()
+      } finally {
+        edges.sparkSession.catalog.dropGlobalTempView(view)
       }
     }
-    iso.table(ident)
   }
 
   /** The native parquet-bucketBy layout for an arbitrary edge frame —
@@ -1262,18 +1210,9 @@ object GraphOps extends QueryModule {
   def bucketEdgesNative(edges: DataFrame): DataFrame = {
     val s = edges.sparkSession
     val tbl = s"graft_edges_g${edgeFrameFingerprint(edges)}" +
-      s"_b$edgeBuckets" + s"_p${ProcessHandle.current().pid()}"
-    edgeEtlLock.synchronized {
-      if (!edgeEtlAlways && writtenEdgeTables.contains(tbl) &&
-          s.catalog.tableExists(tbl)) {
-        s.table(tbl)
-      } else {
-        val out = writeBucketedEdges(s, tbl,
-          edges.select(col("src"), col("dst")))
-        writtenEdgeTables.add(tbl)
-        out
-      }
-    }
+      s"_b$Q201Buckets" + s"_p${ProcessHandle.current().pid()}"
+    writeOnce(s, tbl)(
+      writeBucketedEdges(s, tbl, edges.select(col("src"), col("dst"))))
   }
 
   /** One BFS round against the bucketed edge table: semi-join the

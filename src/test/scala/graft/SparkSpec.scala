@@ -12,19 +12,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // DSv2 storage-partitioned joins (KeyGroupedPartitioning zip) —
-      // set at session build so q161 never mutates the shared session
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The mains' session at a fixed `local[4]`: specs never read
+    * `SPARK_GRAFT_CPUS`, so plans and partition counts do not depend on
+    * the box that runs them. */
+  lazy val session: SparkSession = GraftSession(4)
 }
